@@ -29,6 +29,24 @@ import org.apache.spark.sql.SparkSession
   * - nanosAsLong: the testdata's TIMESTAMP(NANOS) columns surface as LONG
   *   (see [[graft.sources.Tables]])
   * - UTC session timezone: bar bucketing must be timezone-stable
+  * - codegen class cache sized to the working set (1,000 entries; Spark's
+  *   default is 100). The cache key is (thread context class loader,
+  *   source), and in local mode the driver's validation compile in
+  *   WholeStageCodegenExec and the tasks' compile run under different
+  *   loaders, so each whole-stage class takes two entries. Measured on 4
+  *   cores: one corpus_pipeline_v5 pass over 4,000 docs compiles 243-254
+  *   classes, and one 3-batch ingest stream (near-dup + URL dedup, month
+  *   upsert, incremental m5) about 250. At 100 entries every class was
+  *   evicted before the next pass could reuse it, so a warm pass
+  *   recompiled 241-247; 1,000 holds about four such working sets. The
+  *   cache is JVM-static and sized once, from the conf in force at the
+  *   JVM's first codegen: the setting takes effect only when GraftSession
+  *   builds the JVM's first context
+  * - stage ids out of generated class names (useIdInClassName=false): AQE
+  *   numbers codegen stages in an order that changes from run to run, so
+  *   with GeneratedIteratorForCodegenStage<N> as the class name an
+  *   otherwise identical source misses the cache. The id still shows as
+  *   *(N) in explain output and in the `// codegenStageId=N` comment
   */
 object GraftSession {
 
@@ -41,6 +59,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Release every cached table and persisted/localCheckpointed RDD block.
     * Long-lived sessions (the bench harness runs 81+ queries in one JVM)

@@ -138,16 +138,6 @@ object Features {
         size(filter(arr, v => v <= col(valueCol))) * lit(100.0) / n))
   }
 
-  /** Per-bar slope over n bars: (x - x[-n]) / n (build_h1_regime_router_v2
-    * .py:60-63). */
-  def withSlope(bars: DataFrame, valueCol: String, outCol: String, n: Int,
-                symbolCol: String = "symbol",
-                tsCol: String = "bar_ts_ms"): DataFrame = {
-    val w = byKey(symbolCol, tsCol)
-    bars.withColumn(outCol,
-      (col(valueCol) - lag(col(valueCol), n).over(w)) / n.toDouble)
-  }
-
   /** Daily-anchored VWAP: typical price (h+l+c)/3 volume-weighted,
     * cumulative WITHIN each (symbol, calendar day) — resets at midnight,
     * unlike the full-history anchored [[withVwapZ]]
