@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, Row,
+  SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.Row
 
+import graft.llm.{Dedup, MinHashLsh, Multimodal, Similarity}
 import graft.operators.Backtest
 
 /** Streaming ingestion: the collector path (reference
@@ -149,8 +151,7 @@ object Ingest {
                  n: Int = 8, fpp: Double = 0.001,
                  maxFlagFrac: Double = 0.3,
                  minQualityProb: Double = 0.5): DataFrame = {
-    import graft.llm.{Dedup, TextAnalysis}
-    import org.apache.spark.sql.GraftBridge
+    import graft.llm.TextAnalysis
     val bg = benchmark
       .select(explode(Dedup.shingles(col("text"), n)).as("_g"))
       .select(xxhash64(col("_g")).as("_gh")).distinct()
@@ -199,545 +200,133 @@ object Ingest {
       .dropDuplicatesWithinWatermark("_fp")
       .drop("_fp")
 
-  /** Streaming incremental NEAR-dup dedup — the production growing-corpus
-    * loop around [[graft.llm.MinHashLsh.nearDupIncremental]]: each
-    * micro-batch dedups against the accumulated signature/shingle-hash
-    * index at `indexRoot/index`, appends its accepted docs' index rows
-    * back ([[graft.llm.MinHashLsh.buildIndex]]), and logs every decision
-    * to `indexRoot/decisions`. `foreachBatch` because the index is
-    * cross-batch state no append stream can hold (the same reasoning as
-    * [[shardWriter]]'s packing); within a batch the near-dup clustering
-    * elects min-id survivors exactly as the batch operator does.
-    *
-    * Delivery: committed batch ids are skipped outright; decisions and
-    * index slices live in per-batch `batch_id=N/` subdirectories
-    * OVERWRITTEN in place (the [[perceptualDedupBatch]] /
-    * [[urlDedupBatch]] shape, via the shared [[deltaSnapshot]] /
-    * [[maybeCompactState]] machinery), and the dedup EXCLUDES the current
-    * batch's own partition when reading the index, so a crash-window
-    * replay (index written, marker missing) recomputes against exactly
-    * the pre-batch index view: byte-identical decisions, no duplicate
-    * signature rows (which would inflate maxBucket's combined band-bucket
-    * population for every later batch), no contradictory
-    * accepted→self-dup status flips persisting in the log. `compactEvery`
-    * bounds the index file count; a foreign commitId on a compacted
-    * index fails loudly. (A re-ingest of already-accepted docs under a
-    * genuinely NEW batch id still self-heals: they match their own index
-    * rows at Jaccard 1.0 and come back `dup_of_index` with
-    * `match_id == doc_id` — the replay-idempotency property LlmSpec pins
-    * for the batch API.) */
-  def nearDupWriter(docs: DataFrame, indexRoot: String, threshold: Double,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    k: Int = 32, bands: Int = 8, shingleN: Int = 3,
-                    seed: Int = 42, maxBucket: Option[Int] = None,
-                    commitId: String = "stream",
-                    compactEvery: Int = 0): DataStreamWriter[Row] =
+  /** One cross-batch state directory `root/name` of a state loop:
+    * per-batch delta slices `name/batch_id=N`, folded by `fold` into
+    * versioned `compacted/upto=K` bases. `empty` builds a zero-row frame
+    * with the state schema (only called when no delta slice exists);
+    * every read projects to `cols`. */
+  private final case class StateDir(name: String, cols: Seq[String],
+                                    empty: () => DataFrame,
+                                    fold: DataFrame => DataFrame = identity) {
+    def project(df: DataFrame): DataFrame = df.select(cols.map(col): _*)
+  }
+
+  /** The `foreachBatch` sink behind every public `*Writer`. */
+  private def eachBatch(docs: DataFrame)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     docs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        nearDupBatch(batch.toDF(), batchId, indexRoot, threshold, idCol,
-          textCol, k, bands, shingleN, seed, maxBucket, commitId,
-          compactEvery)
-        ()
+        f(batch.toDF(), batchId)
       }
 
-  /** One idempotent micro-batch of [[nearDupWriter]]: dedup against the
-    * index (own residue excluded) → overwrite `decisions/batch_id=N` →
-    * overwrite the accepted docs' own `index/batch_id=N` signature slice
-    * → commit marker → (optionally) compact the index (identity fold:
-    * each accepted doc's signature lives in exactly one batch slice, so
-    * compaction just bounds the file count). Returns false (and writes
-    * nothing) when the batch id is already committed. */
-  def nearDupBatch(batch: DataFrame, batchId: Long, indexRoot: String,
-                   threshold: Double, idCol: String = "doc_id",
-                   textCol: String = "text", k: Int = 32, bands: Int = 8,
-                   shingleN: Int = 3, seed: Int = 42,
-                   maxBucket: Option[Int] = None,
-                   commitId: String = "stream",
-                   compactEvery: Int = 0): Boolean = {
-    import graft.llm.MinHashLsh
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      indexRoot, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+  /** Run micro-batch `batchId` of a replay-safe state loop at most once
+    * per `commitId` — the protocol every `foreachBatch` family below
+    * shares ([[nearDupBatch]], [[perceptualDedupBatch]],
+    * [[semanticDedupBatch]], [[repeatedTrimBatch]], [[spanDedupBatch]],
+    * [[urlDedupBatch]], [[overlapCardBatch]], and [[writeShardBatch]]
+    * without a state directory). Returns false, writing nothing, when the
+    * batch is already committed.
+    *
+    *  1. Skip: a batch whose marker `_committed_batches/<commitId>/<batchId>`
+    *     exists is done. `foreachBatch` re-runs the last uncommitted batch
+    *     after a restart, and batch ids restart at 0 with every new
+    *     checkpoint, so pair `commitId` 1:1 with the query's
+    *     checkpointLocation.
+    *  1. Body: the family reads its state through [[deltaSnapshot]] with
+    *     its OWN `batch_id=N` slice excluded, decides, and writes each
+    *     output and its state delta to its own `batch_id=N` slice
+    *     ([[overwriteSlice]]). A crash inside the body leaves only slices
+    *     of batch N and no marker, so the replay decides against exactly
+    *     the pre-batch state — its own residue can neither pass as history
+    *     nor persist as duplicate rows — and rewrites the same slices in
+    *     place: byte-identical outputs, no residue.
+    *  1. Marker: touched only after the body returns, so a committed batch
+    *     has every slice complete.
+    *  1. Compaction ([[maybeCompactState]], when `state` is given and
+    *     `compactEvery` > 0) runs after the marker, so every delta it folds
+    *     is committed and a replayed batch was never folded. It writes the
+    *     base, then its mark, then deletes what the base supersedes.
+    *     Correctness is read-side: readers take only the newest base that
+    *     carries this commitId's mark and only deltas above it (`> K`), so
+    *     a crash between those steps leaves leftovers that readers ignore
+    *     and the next compaction deletes, never a double count. That is
+    *     what makes the non-idempotent folds (summed counts) safe.
+    *
+    * StateLoopCrashSpec crashes every family at every one of these steps
+    * and checks that the replayed, continued stream equals an
+    * uninterrupted one. */
+  private def commitOnce(spark: SparkSession, root: String, commitId: String,
+                         batchId: Long, state: Option[StateDir] = None,
+                         compactEvery: Int = 0)(body: => Unit): Boolean = {
+    val marker = new Path(root, s"_committed_batches/$commitId/$batchId")
+    val fs = fileSystem(spark, marker)
     if (fs.exists(marker)) return false
-    def emptyIndex = MinHashLsh.buildIndex(batch.limit(0), idCol, textCol,
-      k, shingleN, seed)
-    val indexCols = Seq(idCol, "minhash_sig", "shingle_hashes")
-    val index = deltaSnapshot(spark, indexRoot, "index", commitId,
-      excludeBatch = Some(batchId), emptyIndex, indexCols)
-    // nearDupIncremental returns an eagerly-materialized local checkpoint
-    // (and has already released its internal pins), so the two writes
-    // below read settled blocks — the index overwrite cannot re-read a
-    // half-written index through a lazy plan — and the unpersist at the
-    // end of this method is the ONLY cleanup the batch needs: the stream
-    // holds at most one batch's decision blocks at any time
-    val decisions = MinHashLsh.nearDupIncremental(batch, index, threshold,
-      idCol, textCol, k, bands, shingleN, seed, maxBucket)
-    // decisions land BEFORE the index write mutates the directory; the
-    // own-subdir overwrite keeps crash-window replays residue-free (the
-    // urlDedupBatch pattern — the old flat append persisted contradictory
-    // accepted→self-dup decision rows forever)
-    decisions.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"decisions/batch_id=$batchId").toString)
-    val acceptedIds = spark.read.parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"decisions/batch_id=$batchId").toString)
-      .where(col("status") === "accepted").select(col(idCol))
-    MinHashLsh.buildIndex(batch.join(acceptedIds, Seq(idCol)), idCol,
-        textCol, k, shingleN, seed)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"index/batch_id=$batchId").toString)
-    val out = fs.create(marker, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-    maybeCompactState(spark, indexRoot, "index", commitId, batchId,
-      compactEvery, identity, emptyIndex, indexCols)
-    // releasePinned, not Dataset.unpersist: the checkpoint blocks are
-    // RDD-persisted directly (LogicalRDD leaf), which CacheManager-based
-    // unpersist does not touch
-    org.apache.spark.sql.GraftBridge.releasePinned(decisions)
+    body
+    touch(fs, marker)
+    state.foreach(maybeCompactState(spark, root, commitId, batchId,
+      compactEvery, _))
     true
   }
 
-  /** Streaming perceptual image-dedup loop — the production shape of
-    * [[graft.llm.Multimodal.perceptualNearDupIncremental]] for a
-    * continuous multimodal crawl: each micro-batch dedups its payloads
-    * against the accumulated dHash index at `indexRoot/index` (8
-    * bytes/image — historical payloads are never re-read), writes its
-    * decisions under `decisions/batch_id=N/`, and appends the ACCEPTED
-    * images' hashes ([[graft.llm.Multimodal.buildDHashIndex]]) back to
-    * the index. `foreachBatch` because the index is cross-batch state
-    * (same reasoning as [[nearDupWriter]]).
-    *
-    * Delivery: committed batch ids are skipped outright; index slices
-    * live in per-batch `index/batch_id=N/` subdirectories OVERWRITTEN in
-    * place, and the dedup additionally EXCLUDES the current batch's own
-    * partition when reading the index, so a crash-window replay (index
-    * written, marker missing) recomputes against exactly the pre-batch
-    * index view — its own residue cannot masquerade as history, cannot
-    * persist as duplicate rows (which would inflate maxBucket's
-    * per-(band, chunk) population counts for every later batch), and
-    * cannot flag the whole batch dup_of_index — and own-subdir decision
-    * overwrite keeps the log residue-free (StreamingSpec pins stream ≡
-    * batch loop and replay identity). */
-  def perceptualDedupWriter(docs: DataFrame, indexRoot: String,
-                            maxHamming: Int = 10, idCol: String = "doc_id",
-                            payloadCol: String = "payload",
-                            maxBucket: Option[Int] = None,
-                            commitId: String = "stream",
-                            compactEvery: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        perceptualDedupBatch(batch.toDF(), batchId, indexRoot, maxHamming,
-          idCol, payloadCol, maxBucket, commitId, compactEvery)
-        ()
-      }
-
-  /** One idempotent micro-batch of [[perceptualDedupWriter]]: dedup
-    * against the index (own residue excluded) → overwrite
-    * `decisions/batch_id=N` → overwrite the accepted hashes' own
-    * `index/batch_id=N` slice → commit marker → (optionally) compact the
-    * index (identity fold: each accepted doc's dHash lives in exactly
-    * one batch slice, so compaction just bounds the file count). Returns
-    * false (and writes nothing) when already committed. */
-  def perceptualDedupBatch(batch: DataFrame, batchId: Long,
-                           indexRoot: String, maxHamming: Int = 10,
-                           idCol: String = "doc_id",
-                           payloadCol: String = "payload",
-                           maxBucket: Option[Int] = None,
-                           commitId: String = "stream",
-                           compactEvery: Int = 0): Boolean = {
-    import graft.llm.Multimodal
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      indexRoot, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(marker)) return false
-    def emptyIndex = Multimodal.buildDHashIndex(
-      batch.limit(0), idCol, payloadCol)
-    val index = deltaSnapshot(spark, indexRoot, "index", commitId,
-      excludeBatch = Some(batchId), emptyIndex, Seq(idCol, "dhash"))
-    val decisions = Multimodal.perceptualNearDupIncremental(batch, index,
-      maxHamming, idCol, payloadCol, maxBucket)
-    // decisions execute (write) BEFORE the index append mutates the
-    // directory the plan reads — the own-subdir overwrite keeps replays
-    // residue-free (the urlDedupBatch pattern)
-    decisions.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"decisions/batch_id=$batchId").toString)
-    val acceptedIds = spark.read.parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"decisions/batch_id=$batchId").toString)
-      .where(col("status") === "accepted").select(col(idCol))
-    // own-subdir OVERWRITE (the urlDedupBatch state/batch_id=N pattern),
-    // NOT a flat append: a crash-window replay rewrites its identical
-    // slice in place instead of appending duplicate dHash rows — which
-    // would persist forever and, under maxBucket, inflate the combined
-    // per-(band, chunk) population so later batches silently drop real
-    // candidates. batch_id stays visible to readers as the partition col.
-    Multimodal.buildDHashIndex(batch.join(acceptedIds, Seq(idCol)),
-        idCol, payloadCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"index/batch_id=$batchId").toString)
-    val out = fs.create(marker, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-    maybeCompactState(spark, indexRoot, "index", commitId, batchId,
-      compactEvery, identity, emptyIndex, Seq(idCol, "dhash"))
-    true
+  /** Overwrite batch `batchId`'s own slice `root/dir/batch_id=N`; returns
+    * the slice path. */
+  private def overwriteSlice(df: DataFrame, root: String, dir: String,
+                             batchId: Long): String = {
+    val slice = new Path(root, s"$dir/batch_id=$batchId").toString
+    df.write.mode(SaveMode.Overwrite).parquet(slice)
+    slice
   }
 
-  /** Streaming incremental SEMANTIC dedup — the production loop around
-    * [[graft.llm.Similarity.semanticDedupIncremental]] (growing-corpus
-    * SemDeDup): the FIRST batch bootstraps the frozen codebook
-    * ([[graft.llm.Similarity.trainCodebook]], written once to
-    * `indexRoot/codebook` behind its own marker — deterministic, so a
-    * crash-window replay retrains the identical codebook from the same
-    * replayed batch), and every batch then assigns under it, dedups
-    * against the accumulated kept-vector index at `indexRoot/index`
-    * (per-batch `batch_id=N` subdirs — the shared [[deltaSnapshot]] /
-    * [[maybeCompactState]] machinery, `compactEvery` bounds file count),
-    * writes decisions to `decisions/batch_id=N`, and stores its accepted
-    * vectors back to the index. `foreachBatch` because the index and
-    * codebook are cross-batch state (the [[nearDupWriter]] reasoning).
-    *
-    * Delivery: committed batch ids are skipped outright; own-subdir
-    * overwrite + own-partition exclusion on the index read make a
-    * crash-window replay byte-identical (StreamingSpec pins stream ≡
-    * batch loop and replay identity). */
-  def semanticDedupWriter(docs: DataFrame, indexRoot: String, k: Int = 8,
-                          tau: Double = 0.95, iters: Int = 0,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding",
-                          maxCell: Option[Int] = None,
-                          commitId: String = "stream",
-                          compactEvery: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        semanticDedupBatch(batch.toDF(), batchId, indexRoot, k, tau, iters,
-          idCol, vecCol, maxCell, commitId, compactEvery)
-        ()
-      }
-
-  /** One idempotent micro-batch of [[semanticDedupWriter]]: load (or
-    * bootstrap) the frozen codebook → dedup against the index (own
-    * residue excluded) → overwrite `decisions/batch_id=N` → overwrite
-    * the accepted vectors' own `index/batch_id=N` slice → commit marker
-    * → (optionally) compact. Returns false when already committed. */
-  def semanticDedupBatch(batch: DataFrame, batchId: Long, indexRoot: String,
-                         k: Int = 8, tau: Double = 0.95, iters: Int = 0,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         maxCell: Option[Int] = None,
-                         commitId: String = "stream",
-                         compactEvery: Int = 0): Boolean = {
-    import graft.llm.Similarity
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      indexRoot, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(marker)) return false
-    // frozen codebook: bootstrap from the first NON-EMPTY batch, then
-    // load forever. An empty batch before bootstrap (a stream can open
-    // with one) commits as a no-op — it carries no vectors to decide and
-    // must not crash the codebook trainer or freeze a vacuous codebook.
-    val cbPath = new org.apache.hadoop.fs.Path(indexRoot, "codebook")
-    val cbMark = new org.apache.hadoop.fs.Path(
-      indexRoot, s"_codebook_mark/$commitId")
-    def emptyDecisions = batch.limit(0).select(col(idCol),
-      lit(0).cast("int").as("cluster"),
-      lit(null).cast("string").as("status"),
-      col(idCol).as("match_id"),
-      lit(null).cast("double").as("sim"))
-    if (!fs.exists(cbMark) && batch.isEmpty) {
-      assertCodebookOwned(fs, indexRoot, commitId, cbPath)
-      // schema-only decisions slice BEFORE the marker: every committed
-      // batch — even a pre-bootstrap empty one — must have a readable
-      // decisions/batch_id=N dir, or consumers enumerating decisions by
-      // committed batch ids hit a missing parquet path
-      emptyDecisions.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(new org.apache.hadoop.fs.Path(
-          indexRoot, s"decisions/batch_id=$batchId").toString)
-      val out = fs.create(marker, true)
-      try out.write(Array.emptyByteArray) finally out.close()
-      return true
-    }
-    val centers: Array[Array[Double]] =
-      if (fs.exists(cbMark))
-        spark.read.parquet(cbPath.toString).orderBy(col("cell"))
-          .collect().map(_.getSeq[Double](1).toArray)
-      else {
-        // the codebook is shared per indexRoot but marks are
-        // commitId-scoped: retraining over a FOREIGN commitId's codebook
-        // would silently OVERWRITE it, after which the stored index
-        // clusters disagree with new assignments and cell-confined
-        // probes silently miss duplicates — fail loudly instead (the
-        // assertCompactionVisible posture for the codebook)
-        assertCodebookOwned(fs, indexRoot, commitId, cbPath)
-        val c = Similarity.trainCodebook(batch, k, iters, idCol, vecCol)
-        import spark.implicits._
-        c.zipWithIndex.toSeq.map { case (cv, i) => (i, cv.toSeq) }
-          .toDF("cell", "cv")
-          .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(cbPath.toString)
-        val mo = fs.create(cbMark, true)
-        try mo.write(Array.emptyByteArray) finally mo.close()
-        c
-      }
-    def emptyIndex = batch.limit(0).select(col(idCol),
-      lit(0).cast("int").as("cluster"),
-      col(vecCol).cast("array<double>").as(vecCol))
-    val index = deltaSnapshot(spark, indexRoot, "index", commitId,
-      excludeBatch = Some(batchId), emptyIndex,
-      Seq(idCol, "cluster", vecCol))
-    Similarity.semanticDedupIncremental(batch, index, centers, tau,
-        idCol, vecCol, maxCell)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"decisions/batch_id=$batchId").toString)
-    val accepted = spark.read.parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"decisions/batch_id=$batchId").toString)
-      .where(col("status") === "accepted")
-      .select(col(idCol), col("cluster"))
-    batch.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
-      .join(accepted, Seq(idCol))
-      .select(col(idCol), col("cluster"), col(vecCol))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"index/batch_id=$batchId").toString)
-    val out = fs.create(marker, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-    maybeCompactState(spark, indexRoot, "index", commitId, batchId,
-      compactEvery, identity, emptyIndex, Seq(idCol, "cluster", vecCol))
-    true
+  /** Write the `decisions` slice, then the `index` slice `indexOf` builds
+    * from the accepted rows (projected to `cols`), read back from the
+    * written slice so the index write never re-runs the decision plan. */
+  private def indexAccepted(spark: SparkSession, root: String, batchId: Long,
+                            decisions: DataFrame, cols: String*)(
+      indexOf: DataFrame => DataFrame): Unit = {
+    val accepted = spark.read.parquet(overwriteSlice(decisions, root,
+        "decisions", batchId))
+      .where(col("status") === "accepted").select(cols.map(col): _*)
+    overwriteSlice(indexOf(accepted), root, "index", batchId)
   }
 
-  /** Streaming incremental repeated-gram TRIM — the production loop
-    * around [[graft.llm.Dedup.repeatedNgramTrimIncremental]], completing
-    * the batch+streaming pairing the exact and near-dup incremental
-    * shapes already have: each micro-batch trims against the accumulated
-    * gram-count index at `indexRoot/gram_index`, writes its trimmed rows
-    * to `indexRoot/trimmed`, and appends its OWN gram counts
-    * ([[graft.llm.Dedup.buildGramIndex]]) back to the index so later
-    * batches see this batch's repetition. `foreachBatch` because the
-    * index is cross-batch state (same reasoning as [[nearDupWriter]]).
-    *
-    * Delivery: committed batch ids are skipped outright. The crash window
-    * (index written, marker missing) is handled by storing index slices
-    * in per-batch `gram_index/batch_id=N/` subdirectories OVERWRITTEN in
-    * place and having the trim EXCLUDE the current batch's own partition
-    * when reading the index — a replay therefore recomputes against
-    * exactly the pre-crash index view and emits byte-identical trimmed
-    * rows (no double-counting of the batch's own grams, which would
-    * otherwise trim unique text on replay), and no duplicate index rows
-    * can persist (the incremental trim SUMS counts per gram, so flat
-    * append residue would double-count history for every later batch;
-    * StreamingSpec pins replay identity). */
-  def repeatedTrimWriter(docs: DataFrame, indexRoot: String, n: Int = 10,
-                         minCount: Int = 2, idCol: String = "doc_id",
-                         textCol: String = "text",
-                         commitId: String = "stream",
-                         compactEvery: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        repeatedTrimBatch(batch.toDF(), batchId, indexRoot, n, minCount,
-          idCol, textCol, commitId, compactEvery)
-        ()
-      }
-
-  /** One idempotent micro-batch of [[repeatedTrimWriter]]: trim against
-    * the index (minus any of this batch's own replayed rows) → write
-    * trimmed rows → write this batch's gram counts → commit marker →
-    * (optionally) compact the index, folding per-(gram_hash, gram) count
-    * SUMS into a versioned base — the non-idempotent fold is safe under
-    * [[maybeCompactState]]'s read-side >K discipline exactly like the
-    * URL index's n_copies. Returns false (and writes nothing) when the
-    * batch id is already committed. */
-  def repeatedTrimBatch(batch: DataFrame, batchId: Long, indexRoot: String,
-                        n: Int = 10, minCount: Int = 2,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        commitId: String = "stream",
-                        compactEvery: Int = 0): Boolean = {
-    import graft.llm.Dedup
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      indexRoot, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(marker)) return false
-    def emptyIndex = Dedup.buildGramIndex(batch.limit(0), n, idCol, textCol)
-    val gramCols = Seq("gram_hash", "gram", "n_occurrences")
-    val index = deltaSnapshot(spark, indexRoot, "gram_index", commitId,
-      excludeBatch = Some(batchId), emptyIndex, gramCols)
-    // the trimmed write is the ONLY consumer of the old-index plan and it
-    // executes before the index append mutates the directory, so no
-    // checkpoint pin is needed — the batch stays block-manager-clean
-    // own-subdir OVERWRITE for both outputs (the urlDedupBatch pattern):
-    // replays rewrite their identical slices in place. A flat gram-index
-    // append would leave duplicate (gram, count) rows after a replay, and
-    // the incremental trim SUMS index counts per gram — double-counted
-    // history would trim unique text in every later batch.
-    Dedup.repeatedNgramTrimIncremental(batch, index, n, minCount, idCol,
-        textCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"trimmed/batch_id=$batchId").toString)
-    Dedup.buildGramIndex(batch, n, idCol, textCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"gram_index/batch_id=$batchId").toString)
-    val out = fs.create(marker, true)
+  /** Write an empty marker file (commit markers, compaction marks, the
+    * codebook mark). */
+  private def touch(fs: FileSystem, p: Path): Unit = {
+    val out = fs.create(p, true)
     try out.write(Array.emptyByteArray) finally out.close()
-    maybeCompactState(spark, indexRoot, "gram_index", commitId, batchId,
-      compactEvery,
-      _.groupBy(col("gram_hash"), col("gram"))
-        .agg(sum(col("n_occurrences")).as("n_occurrences")),
-      emptyIndex, gramCols)
-    true
   }
 
-  /** Streaming incremental span-grain (paragraph) dedup — the production
-    * loop around [[graft.llm.Dedup.spanDedupIncremental]] (Dolma's
-    * bloom-paragraph pass as a growing-corpus stream): each micro-batch
-    * keeps only spans that are (a) not in the accumulated span-hash index
-    * at `indexRoot/span_index` and (b) first-occurrence within the batch,
-    * writes its rebuilt docs to `indexRoot/deduped`, and appends its own
-    * span hashes back to the index so later batches see this batch's
-    * paragraphs. `foreachBatch` because the index is cross-batch state
-    * (same reasoning as [[nearDupWriter]]); per-batch cost is O(batch)
-    * plus the Bloom build over the index — which production replaces with
-    * a PERSISTED mergeable filter unioned per batch instead of rebuilt
-    * (the operator doc spells out the swap).
-    *
-    * Delivery: committed batch ids are skipped outright. The crash window
-    * (index written, marker missing) is handled exactly like
-    * [[repeatedTrimWriter]]: index slices live in per-batch
-    * `span_index/batch_id=N/` subdirectories OVERWRITTEN in place and the
-    * read EXCLUDES the current batch's own partition — a replay therefore
-    * dedups against the pre-crash index view and emits byte-identical
-    * rows (without the exclusion the batch's own hashes would be
-    * "history" and the replay would wipe every span), and replays leave
-    * zero residue. */
-  def spanDedupWriter(docs: DataFrame, indexRoot: String,
-                      fpp: Double = 0.01, idCol: String = "doc_id",
-                      textCol: String = "text",
-                      commitId: String = "stream",
-                      compactEvery: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        spanDedupBatch(batch.toDF(), batchId, indexRoot, fpp, idCol,
-          textCol, commitId, compactEvery)
-        ()
-      }
+  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** One idempotent micro-batch of [[spanDedupWriter]]: dedup against the
-    * index (minus any of this batch's own replayed rows) → write rebuilt
-    * docs → write this batch's span hashes → commit marker →
-    * (optionally) compact the index with `distinct()` as the fold (a
-    * span seen by several batches has one hash row per batch; membership
-    * semantics make the dedup exact either way, compaction just bounds
-    * index rows and file count). Returns false (and writes nothing) when
-    * the batch id is already committed. */
-  def spanDedupBatch(batch: DataFrame, batchId: Long, indexRoot: String,
-                     fpp: Double = 0.01, idCol: String = "doc_id",
-                     textCol: String = "text",
-                     commitId: String = "stream",
-                     compactEvery: Int = 0): Boolean = {
-    import graft.llm.Dedup
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      indexRoot, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(marker)) return false
-    def emptyIndex = Dedup.spanHashes(batch.limit(0), textCol)
-    val index = deltaSnapshot(spark, indexRoot, "span_index", commitId,
-      excludeBatch = Some(batchId), emptyIndex, Seq("span_hash"))
-    // the deduped write is the ONLY consumer of the old-index plan and it
-    // executes before the index write mutates the directory (the
-    // operator's Bloom build also runs its index actions here), so no
-    // checkpoint pin is needed — the batch stays block-manager-clean
-    // own-subdir OVERWRITE for both outputs (the urlDedupBatch pattern):
-    // replays rewrite their identical slices in place instead of leaving
-    // duplicate rows (harmless to span membership semantics, but
-    // unbounded residue growth per replay)
-    Dedup.spanDedupIncremental(batch, index, fpp, idCol, textCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"deduped/batch_id=$batchId").toString)
-    Dedup.spanHashes(batch, textCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        indexRoot, s"span_index/batch_id=$batchId").toString)
-    val out = fs.create(marker, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-    maybeCompactState(spark, indexRoot, "span_index", commitId, batchId,
-      compactEvery, _.distinct(), emptyIndex, Seq("span_hash"))
-    true
-  }
+  private def childNames(fs: FileSystem, dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
 
-  /** Streaming URL-grain keep-best dedup loop — the production shape of
-    * [[graft.llm.Dedup.urlKeepBestIncremental]] for a continuous crawl:
-    * each micro-batch's decisions (new/improved/kept per touched address)
-    * land under `stateRoot/decisions/batch_id=N/`, and the batch's OWN
-    * within-batch election is stored as a per-batch index DELTA under
-    * `stateRoot/state/batch_id=N/`. The queryable index is the
-    * commutative-monoid fold of all deltas
-    * ([[graft.llm.Dedup.mergeUrlIndex]]) — identical to one full-pass
-    * [[graft.llm.Dedup.urlKeepBest]] over everything ingested, which is
-    * what makes this loop exact rather than approximate.
-    *
-    * Delivery: committed batch ids are skipped outright; a crash-window
-    * replay OVERWRITES its own `batch_id=N` subdirectories (decisions and
-    * delta both), and the prior-index fold reads deltas with
-    * `batch_id =!= N`, so the replay recomputes byte-identical decisions
-    * against exactly the pre-batch index (StreamingSpec pins stream ≡
-    * batch loop and replay identity). Per-batch cost is O(batch) + an
-    * index-grain fold — history text is never rescanned.
-    *
-    * Compaction (`compactEvery` > 0): the naive loop re-folds EVERY
-    * stored delta each micro-batch, so per-batch fold input (and the
-    * state directory's file count) grows with stream age forever — fine
-    * for a bounded backfill, wrong for a continuous crawl. With
-    * compaction on, once `compactEvery` live deltas accumulate the loop
-    * folds base ∪ deltas(≤ this batch) into a VERSIONED base
-    * `compacted/upto=N` (its own commit marker under
-    * `_compaction_marks/`; the previous base and folded deltas are
-    * best-effort deleted only AFTER the marker commits), and every later
-    * fold reads base(K) + deltas(batch_id > K) only — per-batch input
-    * bounded by |URL index| + compactEvery deltas, file count bounded by
-    * compactEvery + 1. Crash-safety is read-side: the fold always takes
-    * the NEWEST COMMITTED base and ignores deltas ≤ its K, so a crash
-    * between base write, marker, and deletions can only leave ignored
-    * leftovers, never double-count (the `n_copies` sum is not
-    * idempotent, so the >K filter — not deletion — carries correctness).
-    * A replayed batch can never have been folded into a committed base:
-    * its own commit marker lands before compaction starts, and committed
-    * ids are skipped outright. StreamingSpec pins compacted ≡
-    * uncompacted ≡ one full-pass [[graft.llm.Dedup.urlKeepBest]], with
-    * replay identity across a compaction boundary. */
-  def urlDedupWriter(docs: DataFrame, stateRoot: String,
-                     urlCol: String = "url", qualityCol: String = "quality",
-                     idCol: String = "doc_id",
-                     commitId: String = "stream",
-                     compactEvery: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        urlDedupBatch(batch.toDF(), batchId, stateRoot, urlCol, qualityCol,
-          idCol, commitId, compactEvery)
-        ()
-      }
+  /** Ids of the `<prefix><id>` children of `dir` (delta slices, bases). */
+  private def childIds(fs: FileSystem, dir: Path, prefix: String): Seq[Long] =
+    childNames(fs, dir).filter(_.startsWith(prefix))
+      .map(_.stripPrefix(prefix).toLong)
 
-  private val urlIndexCols = Seq("canonical_url", "n_copies", "keep_id",
-    "keep_quality")
+  private def basePath(root: String, k: Long): Path =
+    new Path(root, s"compacted/upto=$k")
 
-  /** Newest committed compacted-base id under `stateRoot`, or -1. */
-  private def committedBaseId(fs: org.apache.hadoop.fs.FileSystem,
-                              stateRoot: String, commitId: String): Long = {
-    val marks = new org.apache.hadoop.fs.Path(
-      stateRoot, s"_compaction_marks/$commitId")
-    if (!fs.exists(marks)) -1L
-    else fs.listStatus(marks).map(_.getPath.getName.toLong)
+  private def markPath(root: String, commitId: String, k: Long): Path =
+    new Path(root, s"_compaction_marks/$commitId/$k")
+
+  /** Every compaction mark under `root`, as (commitId, K). */
+  private def compactionMarks(fs: FileSystem,
+                              root: String): Seq[(String, Long)] =
+    for {
+      cid <- childNames(fs, new Path(root, "_compaction_marks"))
+      k <- childNames(fs, new Path(root, s"_compaction_marks/$cid"))
+    } yield (cid, k.toLong)
+
+  /** Newest committed compacted-base id under `root`, or -1. */
+  private def committedBaseId(fs: FileSystem, root: String,
+                              commitId: String): Long =
+    compactionMarks(fs, root).collect { case (c, k) if c == commitId => k }
       .foldLeft(-1L)(math.max)
-  }
 
   /** Fail loudly on a commitId/compaction-state mismatch: compaction
     * markers are commitId-scoped but `compacted/upto=K` bases are not,
@@ -748,27 +337,14 @@ object Ingest {
     * COMMITTED under another commitId is exactly that mismatch; an
     * unmarked base is legitimate crash residue (base written, marker
     * missing — its deltas all survive) and stays readable. */
-  private def assertCompactionVisible(fs: org.apache.hadoop.fs.FileSystem,
-                                      stateRoot: String, commitId: String,
-                                      baseK: Long): Unit = {
-    val compacted = new org.apache.hadoop.fs.Path(stateRoot, "compacted")
-    if (!fs.exists(compacted)) return
-    val invisible = fs.listStatus(compacted)
-      .map(_.getPath.getName).filter(_.startsWith("upto="))
-      .map(_.stripPrefix("upto=").toLong).filter(_ > baseK)
-    if (invisible.isEmpty) return
-    val marksRoot = new org.apache.hadoop.fs.Path(
-      stateRoot, "_compaction_marks")
-    val foreign =
-      if (!fs.exists(marksRoot)) Array.empty[(String, Long)]
-      else for {
-        cid <- fs.listStatus(marksRoot).map(_.getPath.getName)
-          if cid != commitId
-        k <- fs.listStatus(new org.apache.hadoop.fs.Path(marksRoot, cid))
-          .map(_.getPath.getName.toLong) if invisible.contains(k)
-      } yield (cid, k)
+  private def assertCompactionVisible(fs: FileSystem, root: String,
+                                      commitId: String, baseK: Long): Unit = {
+    val invisible = childIds(fs, new Path(root, "compacted"), "upto=")
+      .filter(_ > baseK)
+    val foreign = compactionMarks(fs, root).filter { case (c, k) =>
+      c != commitId && invisible.contains(k) }
     if (foreign.nonEmpty) throw new IllegalStateException(
-      s"Delta-compacted state at $stateRoot was compacted under commitId(s) " +
+      s"Delta-compacted state at $root was compacted under commitId(s) " +
         foreign.map(_._1).distinct.mkString("[", ", ", "]") +
         s" (bases upto=${foreign.map(_._2).distinct.sorted.mkString(",")})" +
         s" but is being read with commitId '$commitId', which cannot see " +
@@ -789,15 +365,11 @@ object Ingest {
     * crash-window replay retrains the identical codebook from the same
     * replayed batch; refusing would wedge the stream on its own
     * restart. */
-  private def assertCodebookOwned(fs: org.apache.hadoop.fs.FileSystem,
-                                  indexRoot: String, commitId: String,
-                                  cbPath: org.apache.hadoop.fs.Path): Unit = {
+  private def assertCodebookOwned(fs: FileSystem, indexRoot: String,
+                                  commitId: String, cbPath: Path): Unit = {
     if (!fs.exists(cbPath)) return
-    val marksRoot = new org.apache.hadoop.fs.Path(indexRoot, "_codebook_mark")
-    val foreign =
-      if (!fs.exists(marksRoot)) Array.empty[String]
-      else fs.listStatus(marksRoot).map(_.getPath.getName)
-        .filter(_ != commitId)
+    val foreign = childNames(fs, new Path(indexRoot, "_codebook_mark"))
+      .filter(_ != commitId)
     if (foreign.nonEmpty) throw new IllegalStateException(
       s"Frozen codebook at $cbPath was trained under commitId(s) " +
         foreign.mkString("[", ", ", "]") + s" but commitId '$commitId' " +
@@ -806,40 +378,29 @@ object Ingest {
         "probes would miss duplicates. Use the writer's commitId.")
   }
 
-  /** Queryable snapshot of a delta-compacted state directory — the shared
-    * machinery behind every foreachBatch loop's cross-batch state
-    * (URL index, overlap card states, span/gram/dHash indexes): newest
-    * COMMITTED base (`compacted/upto=K`) ∪ deltas with `batch_id > K`
-    * (minus, on the write path, the current batch's own replay residue),
-    * projected to `cols`. Correctness is READ-side: leftover ≤K deltas
-    * from a crashed deletion and unmarked bases are excluded by the >K
-    * filter / marker check, so even NON-idempotent folds (summed gram
-    * counts, n_copies) can never double-count; partition pruning keeps
+  /** Queryable snapshot of a state directory: newest COMMITTED base
+    * (`compacted/upto=K`) ∪ the deltas with `batch_id > K` that pass
+    * `keep` (a batch's own slice excluded on its write path; deltas up to
+    * the new base for a compaction), projected to the state's columns.
+    * Leftover ≤K deltas from a crashed deletion and unmarked bases are
+    * excluded by the >K filter / marker check; partition pruning keeps
     * the scan to exactly the live delta dirs. */
-  private def deltaSnapshot(spark: org.apache.spark.sql.SparkSession,
-                            stateRoot: String, stateName: String,
-                            commitId: String, excludeBatch: Option[Long],
-                            empty: => DataFrame,
-                            cols: Seq[String]): DataFrame = {
-    val statePath = new org.apache.hadoop.fs.Path(stateRoot, stateName)
-    val fs = statePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val baseK = committedBaseId(fs, stateRoot, commitId)
-    assertCompactionVisible(fs, stateRoot, commitId, baseK)
+  private def deltaSnapshot(spark: SparkSession, root: String,
+                            commitId: String, state: StateDir,
+                            keep: Column = lit(true)): DataFrame = {
+    val statePath = new Path(root, state.name)
+    val fs = fileSystem(spark, statePath)
+    val baseK = committedBaseId(fs, root, commitId)
+    assertCompactionVisible(fs, root, commitId, baseK)
     // a fully-compacted state dir can be EMPTY (every delta deleted) —
     // parquet schema inference fails on it, so gate on dir contents
-    val hasDeltas = fs.exists(statePath) &&
-      fs.listStatus(statePath).exists(_.getPath.getName.startsWith("batch_id="))
     val deltas =
-      if (hasDeltas) {
-        val d0 = spark.read.parquet(statePath.toString)
-          .where(col("batch_id") > baseK)
-        excludeBatch.fold(d0)(b => d0.where(col("batch_id") =!= b))
-          .select(cols.map(col): _*)
-      } else empty.select(cols.map(col): _*)
+      if (childIds(fs, statePath, "batch_id=").nonEmpty)
+        state.project(spark.read.parquet(statePath.toString)
+          .where(col("batch_id") > baseK).where(keep))
+      else state.project(state.empty())
     if (baseK >= 0)
-      spark.read.parquet(new org.apache.hadoop.fs.Path(
-          stateRoot, s"compacted/upto=$baseK").toString)
-        .select(cols.map(col): _*)
+      state.project(spark.read.parquet(basePath(root, baseK).toString))
         .unionByName(deltas)
     else deltas
   }
@@ -848,55 +409,373 @@ object Ingest {
     * `compactEvery` live deltas accumulate — bounding every later
     * [[deltaSnapshot]]'s fold input by |state| + compactEvery deltas and
     * the state dir's file count by compactEvery + 1, instead of growing
-    * with stream age forever. Crash-safe by write → mark → delete
-    * ordering plus the snapshot's read-side >K discipline: a crash
-    * between base write, marker, and deletions can only leave IGNORED
-    * leftovers, never a double-count. Reclamation re-lists and deletes
-    * EVERY delta at or below the new base (crash leftovers below the old
-    * base included), then the superseded base and its marker. */
-  private def maybeCompactState(spark: org.apache.spark.sql.SparkSession,
-                                stateRoot: String, stateName: String,
+    * with stream age forever. Order: base → mark → deletes (the
+    * [[commitOnce]] protocol). Reclamation deletes EVERY delta at or below
+    * the new base, then every older base (unless another commitId marks
+    * it) and every older mark of this commitId — so the leftovers of a
+    * crash inside an earlier compaction are gone after the next one. */
+  private def maybeCompactState(spark: SparkSession, root: String,
                                 commitId: String, batchId: Long,
-                                compactEvery: Int,
-                                fold: DataFrame => DataFrame,
-                                empty: => DataFrame,
-                                cols: Seq[String]): Unit = {
+                                compactEvery: Int, state: StateDir): Unit = {
     if (compactEvery <= 0) return
-    val statePath = new org.apache.hadoop.fs.Path(stateRoot, stateName)
-    val fs = statePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val baseK = committedBaseId(fs, stateRoot, commitId)
-    def basePath(k: Long) = new org.apache.hadoop.fs.Path(
-      stateRoot, s"compacted/upto=$k")
-    val deltaIds =
-      if (!fs.exists(statePath)) Array.empty[Long]
-      else fs.listStatus(statePath)
-        .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-        .map(_.stripPrefix("batch_id=").toLong)
+    val statePath = new Path(root, state.name)
+    val fs = fileSystem(spark, statePath)
+    val baseK = committedBaseId(fs, root, commitId)
+    val deltaIds = childIds(fs, statePath, "batch_id=")
     if (deltaIds.count(k => k > baseK && k <= batchId) < compactEvery) return
-    val baseRows =
-      if (baseK >= 0) spark.read.parquet(basePath(baseK).toString)
-        .select(cols.map(col): _*)
-      else empty.select(cols.map(col): _*)
-    val folded = fold(baseRows.unionByName(
-      spark.read.parquet(statePath.toString)
-        .where(col("batch_id") > baseK && col("batch_id") <= batchId)
-        .select(cols.map(col): _*)))
-    folded.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(basePath(batchId).toString)
-    val mark = new org.apache.hadoop.fs.Path(
-      stateRoot, s"_compaction_marks/$commitId/$batchId")
-    val mo = fs.create(mark, true)
-    try mo.write(Array.emptyByteArray) finally mo.close()
-    // space reclamation only — readers never look below the marker
+    state.fold(deltaSnapshot(spark, root, commitId, state,
+        col("batch_id") <= batchId))
+      .write.mode(SaveMode.Overwrite).parquet(basePath(root, batchId).toString)
+    touch(fs, markPath(root, commitId, batchId))
+    // space reclamation only — readers never look below the new mark
     deltaIds.filter(_ <= batchId).foreach { k =>
-      fs.delete(new org.apache.hadoop.fs.Path(statePath, s"batch_id=$k"),
-        true)
+      fs.delete(new Path(statePath, s"batch_id=$k"), true)
     }
-    if (baseK >= 0) {
-      fs.delete(basePath(baseK), true)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        stateRoot, s"_compaction_marks/$commitId/$baseK"), false)
+    val marks = compactionMarks(fs, root)
+    val foreign = marks.collect { case (c, k) if c != commitId => k }.toSet
+    childIds(fs, new Path(root, "compacted"), "upto=")
+      .filter(k => k < batchId && !foreign(k))
+      .foreach(k => fs.delete(basePath(root, k), true))
+    marks.collect { case (c, k) if c == commitId && k < batchId => k }
+      .foreach(k => fs.delete(markPath(root, commitId, k), false))
+  }
+
+  /** Streaming incremental NEAR-dup dedup — the production growing-corpus
+    * loop around [[graft.llm.MinHashLsh.nearDupIncremental]]: each
+    * micro-batch dedups against the accumulated signature/shingle-hash
+    * index at `indexRoot/index`, appends its accepted docs' index rows
+    * back ([[graft.llm.MinHashLsh.buildIndex]]), and logs every decision
+    * to `indexRoot/decisions`. `foreachBatch` because the index is
+    * cross-batch state no append stream can hold (the same reasoning as
+    * [[shardWriter]]'s packing); within a batch the near-dup clustering
+    * elects min-id survivors exactly as the batch operator does. Each
+    * batch runs the [[commitOnce]] protocol; `compactEvery` bounds the
+    * index file count, and a foreign commitId on a compacted index fails
+    * loudly. (A re-ingest of already-accepted docs under a genuinely NEW
+    * batch id still self-heals: they match their own index rows at
+    * Jaccard 1.0 and come back `dup_of_index` with `match_id == doc_id` —
+    * the replay-idempotency property LlmSpec pins for the batch API.) */
+  def nearDupWriter(docs: DataFrame, indexRoot: String, threshold: Double,
+                    idCol: String = "doc_id", textCol: String = "text",
+                    k: Int = 32, bands: Int = 8, shingleN: Int = 3,
+                    seed: Int = 42, maxBucket: Option[Int] = None,
+                    commitId: String = "stream",
+                    compactEvery: Int = 0): DataStreamWriter[Row] =
+    eachBatch(docs)(nearDupBatch(_, _, indexRoot, threshold, idCol, textCol,
+      k, bands, shingleN, seed, maxBucket, commitId, compactEvery))
+
+  /** One [[commitOnce]] micro-batch of [[nearDupWriter]]: dedup against
+    * the index → `decisions/batch_id=N` → the accepted docs' signature
+    * slice `index/batch_id=N`. Identity fold: each accepted doc's
+    * signature lives in exactly one slice, so compaction only bounds the
+    * file count — and a duplicate signature row (the residue own-slice
+    * overwrite rules out) would inflate maxBucket's combined band-bucket
+    * population for every later batch. */
+  def nearDupBatch(batch: DataFrame, batchId: Long, indexRoot: String,
+                   threshold: Double, idCol: String = "doc_id",
+                   textCol: String = "text", k: Int = 32, bands: Int = 8,
+                   shingleN: Int = 3, seed: Int = 42,
+                   maxBucket: Option[Int] = None,
+                   commitId: String = "stream",
+                   compactEvery: Int = 0): Boolean = {
+    val spark = batch.sparkSession
+    val state = StateDir("index", Seq(idCol, "minhash_sig", "shingle_hashes"),
+      () => MinHashLsh.buildIndex(batch.limit(0), idCol, textCol, k,
+        shingleN, seed))
+    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      // nearDupIncremental returns an eagerly-materialized local checkpoint
+      // (its internal pins already released), so the two writes read
+      // settled blocks. Those blocks are RDD-persisted directly (LogicalRDD
+      // leaf), which CacheManager-based unpersist does not touch: release
+      // them even when a write fails, so a failing stream leaks nothing
+      val decisions = MinHashLsh.nearDupIncremental(batch,
+        deltaSnapshot(spark, indexRoot, commitId, state,
+          col("batch_id") =!= batchId),
+        threshold, idCol, textCol, k, bands, shingleN, seed, maxBucket)
+      try indexAccepted(spark, indexRoot, batchId, decisions, idCol) { acc =>
+        MinHashLsh.buildIndex(batch.join(acc, Seq(idCol)), idCol, textCol, k,
+          shingleN, seed)
+      } finally GraftBridge.releasePinned(decisions)
     }
+  }
+
+  /** Streaming perceptual image-dedup loop — the production shape of
+    * [[graft.llm.Multimodal.perceptualNearDupIncremental]] for a
+    * continuous multimodal crawl: each micro-batch dedups its payloads
+    * against the accumulated dHash index at `indexRoot/index` (8
+    * bytes/image — historical payloads are never re-read), writes its
+    * decisions under `decisions/batch_id=N/`, and appends the ACCEPTED
+    * images' hashes ([[graft.llm.Multimodal.buildDHashIndex]]) back to
+    * the index, each batch under the [[commitOnce]] protocol.
+    * `foreachBatch` because the index is cross-batch state (same
+    * reasoning as [[nearDupWriter]]). */
+  def perceptualDedupWriter(docs: DataFrame, indexRoot: String,
+                            maxHamming: Int = 10, idCol: String = "doc_id",
+                            payloadCol: String = "payload",
+                            maxBucket: Option[Int] = None,
+                            commitId: String = "stream",
+                            compactEvery: Int = 0): DataStreamWriter[Row] =
+    eachBatch(docs)(perceptualDedupBatch(_, _, indexRoot, maxHamming, idCol,
+      payloadCol, maxBucket, commitId, compactEvery))
+
+  /** One [[commitOnce]] micro-batch of [[perceptualDedupWriter]]: dedup
+    * against the index → `decisions/batch_id=N` → the accepted hashes'
+    * slice `index/batch_id=N`. Identity fold: each accepted doc's dHash
+    * lives in exactly one slice, so compaction only bounds the file count
+    * — and a duplicate dHash row would inflate maxBucket's per-(band,
+    * chunk) population so later batches silently drop real candidates. */
+  def perceptualDedupBatch(batch: DataFrame, batchId: Long,
+                           indexRoot: String, maxHamming: Int = 10,
+                           idCol: String = "doc_id",
+                           payloadCol: String = "payload",
+                           maxBucket: Option[Int] = None,
+                           commitId: String = "stream",
+                           compactEvery: Int = 0): Boolean = {
+    val spark = batch.sparkSession
+    val state = StateDir("index", Seq(idCol, "dhash"),
+      () => Multimodal.buildDHashIndex(batch.limit(0), idCol, payloadCol))
+    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      val index = deltaSnapshot(spark, indexRoot, commitId, state,
+        col("batch_id") =!= batchId)
+      indexAccepted(spark, indexRoot, batchId,
+          Multimodal.perceptualNearDupIncremental(batch, index, maxHamming,
+            idCol, payloadCol, maxBucket), idCol) { acc =>
+        Multimodal.buildDHashIndex(batch.join(acc, Seq(idCol)), idCol,
+          payloadCol)
+      }
+    }
+  }
+
+  /** Streaming incremental SEMANTIC dedup — the production loop around
+    * [[graft.llm.Similarity.semanticDedupIncremental]] (growing-corpus
+    * SemDeDup): the FIRST batch bootstraps the frozen codebook
+    * ([[graft.llm.Similarity.trainCodebook]], written once to
+    * `indexRoot/codebook` behind its own marker — deterministic, so a
+    * crash-window replay retrains the identical codebook from the same
+    * replayed batch), and every batch then assigns under it, dedups
+    * against the accumulated kept-vector index at `indexRoot/index`,
+    * writes decisions to `decisions/batch_id=N`, and stores its accepted
+    * vectors back to the index, each batch under the [[commitOnce]]
+    * protocol. `foreachBatch` because the index and codebook are
+    * cross-batch state (the [[nearDupWriter]] reasoning). */
+  def semanticDedupWriter(docs: DataFrame, indexRoot: String, k: Int = 8,
+                          tau: Double = 0.95, iters: Int = 0,
+                          idCol: String = "vec_id",
+                          vecCol: String = "embedding",
+                          maxCell: Option[Int] = None,
+                          commitId: String = "stream",
+                          compactEvery: Int = 0): DataStreamWriter[Row] =
+    eachBatch(docs)(semanticDedupBatch(_, _, indexRoot, k, tau, iters, idCol,
+      vecCol, maxCell, commitId, compactEvery))
+
+  /** One [[commitOnce]] micro-batch of [[semanticDedupWriter]]: load (or
+    * bootstrap: codebook → `_codebook_mark/<commitId>`) the frozen
+    * codebook → dedup against the index → `decisions/batch_id=N` → the
+    * accepted vectors' slice `index/batch_id=N`. Identity fold: each
+    * accepted vector lives in exactly one slice. */
+  def semanticDedupBatch(batch: DataFrame, batchId: Long, indexRoot: String,
+                         k: Int = 8, tau: Double = 0.95, iters: Int = 0,
+                         idCol: String = "vec_id",
+                         vecCol: String = "embedding",
+                         maxCell: Option[Int] = None,
+                         commitId: String = "stream",
+                         compactEvery: Int = 0): Boolean = {
+    val spark = batch.sparkSession
+    val cbPath = new Path(indexRoot, "codebook")
+    val cbMark = new Path(indexRoot, s"_codebook_mark/$commitId")
+    val fs = fileSystem(spark, cbPath)
+    val state = StateDir("index", Seq(idCol, "cluster", vecCol),
+      () => batch.limit(0).select(col(idCol),
+        lit(0).cast("int").as("cluster"),
+        col(vecCol).cast("array<double>").as(vecCol)))
+    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      // frozen codebook: bootstrap from the first NON-EMPTY batch, then
+      // load forever. An empty batch before bootstrap (a stream can open
+      // with one) commits as a no-op — it carries no vectors to decide and
+      // must not crash the codebook trainer or freeze a vacuous codebook.
+      if (!fs.exists(cbMark) && batch.isEmpty) {
+        assertCodebookOwned(fs, indexRoot, commitId, cbPath)
+        // schema-only decisions slice: every committed batch — even a
+        // pre-bootstrap empty one — must have a readable
+        // decisions/batch_id=N dir, or consumers enumerating decisions by
+        // committed batch ids hit a missing parquet path
+        overwriteSlice(batch.limit(0).select(col(idCol),
+            lit(0).cast("int").as("cluster"),
+            lit(null).cast("string").as("status"),
+            col(idCol).as("match_id"),
+            lit(null).cast("double").as("sim")),
+          indexRoot, "decisions", batchId)
+      } else {
+        val centers: Array[Array[Double]] =
+          if (fs.exists(cbMark))
+            spark.read.parquet(cbPath.toString).orderBy(col("cell"))
+              .collect().map(_.getSeq[Double](1).toArray)
+          else {
+            // the codebook is shared per indexRoot but marks are
+            // commitId-scoped: retraining over a FOREIGN commitId's
+            // codebook would silently OVERWRITE it — fail loudly instead
+            assertCodebookOwned(fs, indexRoot, commitId, cbPath)
+            val c = Similarity.trainCodebook(batch, k, iters, idCol, vecCol)
+            import spark.implicits._
+            c.zipWithIndex.toSeq.map { case (cv, i) => (i, cv.toSeq) }
+              .toDF("cell", "cv")
+              .coalesce(1)
+              .write.mode(SaveMode.Overwrite)
+              .parquet(cbPath.toString)
+            touch(fs, cbMark)
+            c
+          }
+        val index = deltaSnapshot(spark, indexRoot, commitId, state,
+          col("batch_id") =!= batchId)
+        indexAccepted(spark, indexRoot, batchId,
+            Similarity.semanticDedupIncremental(batch, index, centers, tau,
+              idCol, vecCol, maxCell), idCol, "cluster") { acc =>
+          batch.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
+            .join(acc, Seq(idCol))
+            .select(col(idCol), col("cluster"), col(vecCol))
+        }
+      }
+    }
+  }
+
+  /** Streaming incremental repeated-gram TRIM — the production loop
+    * around [[graft.llm.Dedup.repeatedNgramTrimIncremental]], completing
+    * the batch+streaming pairing the exact and near-dup incremental
+    * shapes already have: each micro-batch trims against the accumulated
+    * gram-count index at `indexRoot/gram_index`, writes its trimmed rows
+    * to `indexRoot/trimmed`, and appends its OWN gram counts
+    * ([[graft.llm.Dedup.buildGramIndex]]) back to the index so later
+    * batches see this batch's repetition, each batch under the
+    * [[commitOnce]] protocol. `foreachBatch` because the index is
+    * cross-batch state (same reasoning as [[nearDupWriter]]). */
+  def repeatedTrimWriter(docs: DataFrame, indexRoot: String, n: Int = 10,
+                         minCount: Int = 2, idCol: String = "doc_id",
+                         textCol: String = "text",
+                         commitId: String = "stream",
+                         compactEvery: Int = 0): DataStreamWriter[Row] =
+    eachBatch(docs)(repeatedTrimBatch(_, _, indexRoot, n, minCount, idCol,
+      textCol, commitId, compactEvery))
+
+  /** One [[commitOnce]] micro-batch of [[repeatedTrimWriter]]: trim against
+    * the index → `trimmed/batch_id=N` → this batch's gram counts
+    * `gram_index/batch_id=N`. The fold SUMS counts per (gram_hash, gram)
+    * — NOT idempotent: a duplicated slice would double-count history and
+    * trim unique text in every later batch, so own-slice overwrite and the
+    * read-side `> K` filter are what keep it exact. The trimmed write is
+    * the only consumer of the old-index plan and runs before the index
+    * write, so no checkpoint pin is needed. */
+  def repeatedTrimBatch(batch: DataFrame, batchId: Long, indexRoot: String,
+                        n: Int = 10, minCount: Int = 2,
+                        idCol: String = "doc_id", textCol: String = "text",
+                        commitId: String = "stream",
+                        compactEvery: Int = 0): Boolean = {
+    val spark = batch.sparkSession
+    val state = StateDir("gram_index", Seq("gram_hash", "gram", "n_occurrences"),
+      () => Dedup.buildGramIndex(batch.limit(0), n, idCol, textCol),
+      _.groupBy(col("gram_hash"), col("gram"))
+        .agg(sum(col("n_occurrences")).as("n_occurrences")))
+    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      val index = deltaSnapshot(spark, indexRoot, commitId, state,
+        col("batch_id") =!= batchId)
+      overwriteSlice(Dedup.repeatedNgramTrimIncremental(batch, index, n,
+        minCount, idCol, textCol), indexRoot, "trimmed", batchId)
+      overwriteSlice(Dedup.buildGramIndex(batch, n, idCol, textCol),
+        indexRoot, "gram_index", batchId)
+    }
+  }
+
+  /** Streaming incremental span-grain (paragraph) dedup — the production
+    * loop around [[graft.llm.Dedup.spanDedupIncremental]] (Dolma's
+    * bloom-paragraph pass as a growing-corpus stream): each micro-batch
+    * keeps only spans that are (a) not in the accumulated span-hash index
+    * at `indexRoot/span_index` and (b) first-occurrence within the batch,
+    * writes its rebuilt docs to `indexRoot/deduped`, and appends its own
+    * span hashes back to the index so later batches see this batch's
+    * paragraphs, each batch under the [[commitOnce]] protocol (without
+    * the own-slice exclusion the batch's own hashes would be "history"
+    * and a replay would wipe every span). `foreachBatch` because the
+    * index is cross-batch state (same reasoning as [[nearDupWriter]]);
+    * per-batch cost is O(batch) plus the Bloom build over the index —
+    * which production replaces with a PERSISTED mergeable filter unioned
+    * per batch instead of rebuilt (the operator doc spells out the
+    * swap). */
+  def spanDedupWriter(docs: DataFrame, indexRoot: String,
+                      fpp: Double = 0.01, idCol: String = "doc_id",
+                      textCol: String = "text",
+                      commitId: String = "stream",
+                      compactEvery: Int = 0): DataStreamWriter[Row] =
+    eachBatch(docs)(spanDedupBatch(_, _, indexRoot, fpp, idCol, textCol,
+      commitId, compactEvery))
+
+  /** One [[commitOnce]] micro-batch of [[spanDedupWriter]]: dedup against
+    * the index → `deduped/batch_id=N` → this batch's span hashes
+    * `span_index/batch_id=N`. Fold: `distinct()` — idempotent (a span
+    * seen by several batches has one hash row per batch; membership
+    * semantics make the dedup exact either way, compaction bounds index
+    * rows and file count). The deduped write is the only consumer of the
+    * old-index plan (the operator's Bloom build runs its index actions
+    * there) and runs before the index write, so no checkpoint pin is
+    * needed. */
+  def spanDedupBatch(batch: DataFrame, batchId: Long, indexRoot: String,
+                     fpp: Double = 0.01, idCol: String = "doc_id",
+                     textCol: String = "text",
+                     commitId: String = "stream",
+                     compactEvery: Int = 0): Boolean = {
+    val spark = batch.sparkSession
+    val state = StateDir("span_index", Seq("span_hash"),
+      () => Dedup.spanHashes(batch.limit(0), textCol), _.distinct())
+    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      val index = deltaSnapshot(spark, indexRoot, commitId, state,
+        col("batch_id") =!= batchId)
+      overwriteSlice(Dedup.spanDedupIncremental(batch, index, fpp, idCol,
+        textCol), indexRoot, "deduped", batchId)
+      overwriteSlice(Dedup.spanHashes(batch, textCol), indexRoot,
+        "span_index", batchId)
+    }
+  }
+
+  /** Streaming URL-grain keep-best dedup loop — the production shape of
+    * [[graft.llm.Dedup.urlKeepBestIncremental]] for a continuous crawl:
+    * each micro-batch's decisions (new/improved/kept per touched address)
+    * land under `stateRoot/decisions/batch_id=N/`, and the batch's OWN
+    * within-batch election is stored as a per-batch index DELTA under
+    * `stateRoot/state/batch_id=N/`, each batch under the [[commitOnce]]
+    * protocol. The queryable index is the commutative-monoid fold of all
+    * deltas ([[graft.llm.Dedup.mergeUrlIndex]]) — identical to one
+    * full-pass [[graft.llm.Dedup.urlKeepBest]] over everything ingested,
+    * which is what makes this loop exact rather than approximate.
+    * Per-batch cost is O(batch) + an index-grain fold — history text is
+    * never rescanned; `compactEvery` bounds the fold input by |URL index|
+    * + compactEvery deltas instead of letting it grow with stream age.
+    * StreamingSpec pins compacted ≡ uncompacted ≡ one full-pass
+    * [[graft.llm.Dedup.urlKeepBest]], with replay identity across a
+    * compaction boundary. */
+  def urlDedupWriter(docs: DataFrame, stateRoot: String,
+                     urlCol: String = "url", qualityCol: String = "quality",
+                     idCol: String = "doc_id",
+                     commitId: String = "stream",
+                     compactEvery: Int = 0): DataStreamWriter[Row] =
+    eachBatch(docs)(urlDedupBatch(_, _, stateRoot, urlCol, qualityCol, idCol,
+      commitId, compactEvery))
+
+  /** The URL-index state directory: fold [[graft.llm.Dedup.mergeUrlIndex]],
+    * whose `n_copies` sum is NOT idempotent — the read-side `> K` filter,
+    * not deletion, is what keeps it exact across compactions. */
+  private def urlState(spark: SparkSession): StateDir = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("canonical_url", StringType),
+      StructField("n_copies", LongType),
+      StructField("keep_id", LongType),
+      StructField("keep_quality", DoubleType)))
+    StateDir("state", schema.fieldNames.toSeq,
+      () => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      Dedup.mergeUrlIndex)
   }
 
   /** The queryable URL index of a [[urlDedupWriter]] state directory:
@@ -905,67 +784,30 @@ object Ingest {
     * [[graft.llm.Dedup.urlKeepBest]] over everything ingested,
     * whatever the compaction state (StreamingSpec pins compacted ≡
     * uncompacted ≡ full pass). */
-  def urlIndexSnapshot(spark: org.apache.spark.sql.SparkSession,
-                       stateRoot: String,
+  def urlIndexSnapshot(spark: SparkSession, stateRoot: String,
                        commitId: String = "stream"): DataFrame =
-    graft.llm.Dedup.mergeUrlIndex(deltaSnapshot(spark, stateRoot, "state",
-      commitId, excludeBatch = None, emptyUrlIndex(spark), urlIndexCols))
+    Dedup.mergeUrlIndex(deltaSnapshot(spark, stateRoot, commitId,
+      urlState(spark)))
 
-  /** Zero-row frame with the URL-index schema (first-batch bootstrap). */
-  private def emptyUrlIndex(
-      spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("canonical_url", StringType),
-        StructField("n_copies", LongType),
-        StructField("keep_id", LongType),
-        StructField("keep_quality", DoubleType))))
-  }
-
-  /** One idempotent micro-batch of [[urlDedupWriter]]: fold the prior
-    * index (newest committed compacted base + later deltas, excluding
-    * this batch's own residue) → incremental decisions → overwrite
-    * `decisions/batch_id=N` and the batch's `state/batch_id=N` delta →
-    * commit marker → (optionally) compact. Returns false when already
-    * committed. */
+  /** One [[commitOnce]] micro-batch of [[urlDedupWriter]]: fold the prior
+    * index → incremental decisions `decisions/batch_id=N` → the batch's
+    * own election `state/batch_id=N`. */
   def urlDedupBatch(batch: DataFrame, batchId: Long, stateRoot: String,
                     urlCol: String = "url", qualityCol: String = "quality",
                     idCol: String = "doc_id",
                     commitId: String = "stream",
                     compactEvery: Int = 0): Boolean = {
-    import graft.llm.Dedup
     val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      stateRoot, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(marker)) return false
-    // prior index = newest committed base + later deltas, own replay
-    // residue excluded ([[deltaSnapshot]]'s read-side >K discipline is
-    // what makes the non-idempotent n_copies sum safe)
-    val prior = Dedup.mergeUrlIndex(deltaSnapshot(spark, stateRoot,
-      "state", commitId, excludeBatch = Some(batchId),
-      emptyUrlIndex(spark), urlIndexCols))
-    // decisions execute against the PRIOR index before the delta append
-    // mutates the state directory; own-subdir overwrite keeps replays
-    // residue-free (the overlapCardBatch pattern)
-    Dedup.urlKeepBestIncremental(batch, prior, col(urlCol),
-        col(qualityCol), idCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        stateRoot, s"decisions/batch_id=$batchId").toString)
-    Dedup.urlKeepBest(batch, col(urlCol), col(qualityCol), idCol)
-      .select(urlIndexCols.map(col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        stateRoot, s"state/batch_id=$batchId").toString)
-    val out = fs.create(marker, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-    maybeCompactState(spark, stateRoot, "state", commitId, batchId,
-      compactEvery, Dedup.mergeUrlIndex, emptyUrlIndex(spark),
-      urlIndexCols)
-    true
+    val state = urlState(spark)
+    commitOnce(spark, stateRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      val prior = Dedup.mergeUrlIndex(deltaSnapshot(spark, stateRoot,
+        commitId, state, col("batch_id") =!= batchId))
+      overwriteSlice(Dedup.urlKeepBestIncremental(batch, prior, col(urlCol),
+        col(qualityCol), idCol), stateRoot, "decisions", batchId)
+      overwriteSlice(state.project(Dedup.urlKeepBest(batch, col(urlCol),
+        col(qualityCol), idCol)), stateRoot, "state", batchId)
+    }
   }
 
   /** Streaming cross-source overlap DATA CARD — the production loop
@@ -973,80 +815,46 @@ object Ingest {
     * folds to its own per-source (MinHash signature, HLL) state, written
     * under `stateRoot/state/batch_id=N/`, and the refreshed card
     * ([[graft.llm.Dedup.overlapFromState]] over the merge of ALL stored
-    * batch states) lands at `stateRoot/card/batch_id=N/`. `foreachBatch`
-    * because the card is cross-batch state (same reasoning as
-    * [[nearDupWriter]]); per-batch cost is O(batch) + a merge over
-    * |sources|·batches tiny state rows — history is never rescanned.
-    *
-    * Delivery: committed batch ids are skipped outright; a crash-window
-    * replay OVERWRITES its own `batch_id=N` state directory, and the
-    * merge algebra is idempotent anyway (elementwise min and HLL
-    * register-max both absorb duplicates), so a replay can neither grow
-    * the state nor move the card (StreamingSpec pins both, plus
-    * stream-state ≡ one-shot full-pass state bit-identically). */
+    * batch states) lands at `stateRoot/card/batch_id=N/`, each batch
+    * under the [[commitOnce]] protocol. `foreachBatch` because the card
+    * is cross-batch state (same reasoning as [[nearDupWriter]]); per-batch
+    * cost is O(batch) + a merge over |sources|·batches tiny state rows —
+    * history is never rescanned. StreamingSpec pins stream-state ≡
+    * one-shot full-pass state bit-identically. */
   def overlapCardWriter(docs: DataFrame, stateRoot: String, k: Int = 128,
                         srcCol: String = "source", textCol: String = "text",
                         commitId: String = "stream",
                         compactEvery: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        overlapCardBatch(batch.toDF(), batchId, stateRoot, k, srcCol,
-          textCol, commitId, compactEvery)
-        ()
-      }
+    eachBatch(docs)(overlapCardBatch(_, _, stateRoot, k, srcCol, textCol,
+      commitId, compactEvery))
 
-  /** One idempotent micro-batch of [[overlapCardWriter]]: fold the batch
-    * to its per-source state → overwrite `state/batch_id=N` → merge the
-    * stored states → write the refreshed card → commit marker →
-    * (optionally) compact. Returns false (and writes nothing) when the
-    * batch id is already committed.
-    *
-    * Compaction (`compactEvery` > 0): without it the refresh merges one
-    * |sources|-row state dir per batch forever — tiny rows, but the FILE
-    * count (and the merge's input fan-in) grows with stream age. The
-    * shared [[maybeCompactState]] machinery folds every ≤-batch state
-    * into a versioned `compacted/upto=K` base (the fold IS
-    * [[graft.llm.Dedup.mergeOverlapStates]] — elementwise slot-min +
-    * HLL-union are associative and idempotent, so a compacted base
+  /** One [[commitOnce]] micro-batch of [[overlapCardWriter]]. Write order
+    * is state FIRST: `state/batch_id=N`, then the card over every stored
+    * state, this batch's included → `card/batch_id=N`. Fold:
+    * [[graft.llm.Dedup.mergeOverlapStates]] — elementwise slot-min and
+    * HLL register-max are associative and idempotent, so a compacted base
     * merged with later deltas is bit-identical to merging every raw
-    * per-batch state; StreamingSpec pins compacted ≡ uncompacted card
-    * and the file-count bound), and every later refresh reads base +
-    * ≤compactEvery deltas. */
+    * per-batch state, and even a duplicated state could not move the card
+    * (StreamingSpec pins compacted ≡ uncompacted card and the file-count
+    * bound). */
   def overlapCardBatch(batch: DataFrame, batchId: Long, stateRoot: String,
                        k: Int = 128, srcCol: String = "source",
                        textCol: String = "text",
                        commitId: String = "stream",
                        compactEvery: Int = 0): Boolean = {
-    import graft.llm.Dedup
     val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      stateRoot, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(marker)) return false
-    def emptyState = Dedup.sourceOverlapState(
-      batch.limit(0), k, srcCol, textCol)
-    // Overwrite of the batch's OWN hive subdirectory: a replay rewrites
-    // the identical per-batch state in place instead of appending residue
-    Dedup.sourceOverlapState(batch, k, srcCol, textCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        stateRoot, s"state/batch_id=$batchId").toString)
-    val merged = Dedup.mergeOverlapStates(deltaSnapshot(spark, stateRoot,
-      "state", commitId, excludeBatch = None, emptyState,
-      overlapStateCols))
-    Dedup.overlapFromState(merged)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        stateRoot, s"card/batch_id=$batchId").toString)
-    val out = fs.create(marker, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-    maybeCompactState(spark, stateRoot, "state", commitId, batchId,
-      compactEvery, df => Dedup.mergeOverlapStates(df), emptyState,
-      overlapStateCols)
-    true
+    val state = StateDir("state", Seq("_src", "_sig", "_hll"),
+      () => Dedup.sourceOverlapState(batch.limit(0), k, srcCol, textCol),
+      Dedup.mergeOverlapStates(_))
+    commitOnce(spark, stateRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      overwriteSlice(Dedup.sourceOverlapState(batch, k, srcCol, textCol),
+        stateRoot, "state", batchId)
+      overwriteSlice(Dedup.overlapFromState(Dedup.mergeOverlapStates(
+          deltaSnapshot(spark, stateRoot, commitId, state))),
+        stateRoot, "card", batchId)
+    }
   }
-
-  private val overlapStateCols = Seq("_src", "_sig", "_hll")
 
   /** Streaming serving of the relation-model DSIR scorer
     * ([[graft.llm.Selection.scoreWithRelation]]): train the model on
@@ -1063,11 +871,10 @@ object Ingest {
   def scoreDocsStream(docs: DataFrame, model: DataFrame, oovWeight: Double,
                       idCol: String = "doc_id", textCol: String = "text")(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        sink(graft.llm.Selection.scoreWithRelation(
-          batch.toDF(), model, oovWeight, idCol, textCol), batchId)
-      }
+    eachBatch(docs) { (batch, batchId) =>
+      sink(graft.llm.Selection.scoreWithRelation(
+        batch, model, oovWeight, idCol, textCol), batchId)
+    }
 
   /** Streaming egress into the training-shard lake layout: every
     * micro-batch is packed ([[graft.llm.TextAnalysis.packShards]]) and
@@ -1084,56 +891,35 @@ object Ingest {
     * (each batch bin-packs what it saw — a trainer reads parts in file
     * order, exactly as with the batch writer's multi-part shards).
     *
-    * Delivery: `foreachBatch` re-runs the last uncommitted batch after a
-    * restart, and a blind append would duplicate it — [[writeShardBatch]]
-    * therefore skips batch ids that already carry a commit marker
-    * (`_committed_batches/<id>`, written through the Hadoop FS like the
-    * lake's `_meta.json`, after the append succeeds). That closes the
-    * common replay path (StreamingSpec re-runs a batch id and asserts no
-    * growth); the residual window — a crash BETWEEN append and marker —
-    * degrades to at-least-once of one batch, and because per-batch packing
-    * is deterministic the replayed rows are byte-identical, so the lake's
-    * dedup-compact remedy (keep-first on (shard, id)) restores
-    * exactly-once, the same contract as the collector's staging path. */
+    * Delivery: the [[commitOnce]] marker skips replays of committed batch
+    * ids (StreamingSpec re-runs a batch id and asserts no growth). The
+    * sink APPENDS instead of overwriting a slice, so the residual window —
+    * a crash BETWEEN append and marker — degrades to at-least-once of one
+    * batch; because per-batch packing is deterministic the replayed rows
+    * are byte-identical, so the lake's dedup-compact remedy (keep-first on
+    * (shard, id)) restores exactly-once, the same contract as the
+    * collector's staging path. */
   def shardWriter(docs: DataFrame, root: String, tokensPerPack: Long,
                   nShards: Int, idCol: String = "doc_id",
                   textCol: String = "text",
                   maxRecordsPerFile: Long = 5000000L,
                   commitId: String = "stream"): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        writeShardBatch(batch.toDF(), batchId, root, tokensPerPack, nShards,
-          idCol, textCol, maxRecordsPerFile, commitId)
-        ()
-      }
+    eachBatch(docs)(writeShardBatch(_, _, root, tokensPerPack, nShards, idCol,
+      textCol, maxRecordsPerFile, commitId))
 
-  /** One idempotent micro-batch of [[shardWriter]]: pack → append →
+  /** One [[commitOnce]] micro-batch of [[shardWriter]]: pack → append →
     * commit marker. Returns false (and writes nothing) when the batch id
-    * is already committed — the replay-dedup contract foreachBatch
-    * requires from its sink. `commitId` namespaces the markers per
-    * logical query (batch ids restart at 0 for every new checkpoint, so
-    * two queries appending to one root would otherwise collide) — pair it
-    * 1:1 with the query's checkpointLocation. */
+    * is already committed. */
   def writeShardBatch(batch: DataFrame, batchId: Long, root: String,
                       tokensPerPack: Long, nShards: Int,
                       idCol: String = "doc_id", textCol: String = "text",
                       maxRecordsPerFile: Long = 5000000L,
-                      commitId: String = "stream"): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(
-      root, s"_committed_batches/$commitId/$batchId")
-    val fs = marker.getFileSystem(
-      batch.sparkSession.sessionState.newHadoopConf())
-    if (fs.exists(marker)) false
-    else {
-      val packed = graft.llm.TextAnalysis.packShards(
-        batch, tokensPerPack, nShards, idCol, textCol)
-      graft.sources.Lake.writeShards(packed, root, idCol,
-        maxRecordsPerFile, org.apache.spark.sql.SaveMode.Append)
-      val out = fs.create(marker, true)
-      try out.write(Array.emptyByteArray) finally out.close()
-      true
+                      commitId: String = "stream"): Boolean =
+    commitOnce(batch.sparkSession, root, commitId, batchId) {
+      graft.sources.Lake.writeShards(graft.llm.TextAnalysis.packShards(
+          batch, tokensPerPack, nShards, idCol, textCol),
+        root, idCol, maxRecordsPerFile, SaveMode.Append)
     }
-  }
 
   final case class Tick(symbol: String, tsMs: Long, value: Double)
   final case class GapEvent(symbol: String, prevMs: Long, tsMs: Long, gapMinutes: Long)
