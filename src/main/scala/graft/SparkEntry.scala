@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Features
 import graft.llm.{Bpe, Cluster, Curation, Dedup, MinHashLsh, Multimodal, Sampling, Selection, SimHash, Similarity, TextAnalysis, Unigram}
+import graft.llm.Curation.StageBoundaryOps
 import graft.ml.{MlFilter, QualityClassifier, RegimeEval}
 import graft.operators.{AsOf, Audit, Backtest, Canonical, EmaTrend, FlatLevels, Flow, Funding, Gaps, Ichimoku, IchimokuMtf, IchimokuParams, LowPlus, Profile, RangeBoxes, Regime, RegimeCases, RegimeParams, Resample, RouterGate, Semi, Sessions, Stats, StickyState, TfAggregate, VolRegime}
 import graft.sources.{Bars, Lake, Tables}
@@ -80,45 +81,36 @@ object SparkEntry {
         .otherwise(""))
   }
 
-  /** Capstone stage-boundary materialization, parameterized by the
-    * session conf `graft.stage.boundary` so one code path serves both the
-    * bench box and a real cluster:
-    *
-    *  - `local` (default): eager `localCheckpoint` — fastest, but blocks
-    *    are UNREPLICATED executor-local storage, so on a multi-executor
-    *    cluster one executor loss mid-capstone fails the job and the
-    *    truncated lineage cannot recompute. The right trade at local[32]
-    *    and for minutes-long runs.
-    *  - `reliable`: eager reliable `checkpoint` into
-    *    `spark.sparkContext`'s checkpoint directory (must be set) — the
-    *    cluster-durable stage write every published pipeline performs
-    *    between its per-doc prefix and cross-doc suffix; survives
-    *    executor loss, tasks retry from the checkpoint files
-    *    (FaultToleranceSpec injects first-attempt task failures through
-    *    a reliable-boundary capstone and pins identical output).
-    *  - `none`: passthrough — plan-shape A/Bs and debugging.
-    *
-    * At 100 TB the `reliable` files land on the cluster's checkpoint
-    * store (HDFS/object store) exactly like the lake-materialized stage
-    * dirs the streaming loops write — same durability class, chosen by
-    * conf instead of a code fork. */
-  private[graft] def stageBoundary(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("graft.stage.boundary", "local") match {
-      case "local" => df.localCheckpoint(true)
-      case "reliable" =>
-        require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "graft.stage.boundary=reliable requires " +
-            "spark.sparkContext.setCheckpointDir(...)")
-        df.checkpoint(eager = true)
-      case "none" => df
-      case other => throw new IllegalArgumentException(
-        s"graft.stage.boundary must be local|reliable|none, got '$other'")
-    }
-
-  /** Chained-call form of [[stageBoundary]]. */
-  private[graft] implicit class StageBoundaryOps(df: DataFrame) {
-    def stagePin(): DataFrame = stageBoundary(df)
+  /** The seeded crawl page behind `html_extract` and `ccnet_pipeline`:
+    * each doc (doc_id, text, source) wrapped in title/nav/headline, two
+    * body paragraphs (the first with a stopword-rich tail so block classes
+    * diversify; the second opened by `secondPara`), a share-links div and
+    * a footer. */
+  private def seededPage(d: DataFrame, secondPara: String): DataFrame = {
+    val ln2 = floor(length(col("text")) / 2).cast("int")
+    d.select(col("doc_id"), concat(
+      lit("<html><head><title>Doc "), col("doc_id"), lit("</title>"),
+      lit("<style>p{color:red}</style><script>var x=1;</script></head><body>"),
+      lit("<nav><a href=\"/\">Home</a> <a href=\"/a\">Archive</a> " +
+        "<a href=\"/t\">Tags</a></nav>"),
+      lit("<h1>doc "), col("doc_id"), lit(" notes</h1>"),
+      lit("<p>"), col("text").substr(lit(1), ln2),
+      lit(" the of to in is it that and a an.</p>"),
+      lit(secondPara), col("text").substr(ln2 + 1, length(col("text"))),
+      lit("</p>"),
+      lit("<div>Share: <a href=\"#\">Tweet</a> <a href=\"#\">Like</a></div>"),
+      lit("<footer>copyright 2024 "), col("source"),
+      lit(" media group</footer>"), lit("</body></html>")).as("html"))
   }
+
+  /** jusText block extraction with the thresholds tuned to the synthetic
+    * corpus's ~6% natural stopword density: per-doc class census and
+    * extracted main text. */
+  private def jusText(page: DataFrame): DataFrame =
+    TextAnalysis.htmlExtractDocs(
+      TextAnalysis.htmlExtractBlocks(page, lengthLow = 40,
+        lengthHigh = 120, stopLow = 0.06, stopHigh = 0.12,
+        maxLinkDensity = 0.25))
 
   /** embeddings ∪ seeded near-dups (every 5th vector, position-dependent
     * jitter, id offset +1000000), all cast to array<double>. */
@@ -1913,29 +1905,10 @@ object SparkEntry {
     // blocks rescued next to good prose, and rolled up to the per-doc
     // class census + extracted main text. Thresholds tuned to the
     // synthetic corpus's ~6% natural stopword density.
-    "html_extract" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("source"))
-      val ln2 = floor(length(col("text")) / 2).cast("int")
-      val page = d.select(col("doc_id"), concat(
-        lit("<html><head><title>Doc "), col("doc_id"), lit("</title>"),
-        lit("<style>p{color:red}</style><script>var x=1;</script></head><body>"),
-        lit("<nav><a href=\"/\">Home</a> <a href=\"/a\">Archive</a> " +
-          "<a href=\"/t\">Tags</a></nav>"),
-        lit("<h1>doc "), col("doc_id"), lit(" notes</h1>"),
-        lit("<p>"), col("text").substr(lit(1), ln2),
-        lit(" the of to in is it that and a an.</p>"),
-        lit("<p>"), col("text").substr(ln2 + 1, length(col("text"))),
-        lit("</p>"),
-        lit("<div>Share: <a href=\"#\">Tweet</a> <a href=\"#\">Like</a></div>"),
-        lit("<footer>copyright 2024 "), col("source"),
-        lit(" media group</footer>"), lit("</body></html>")).as("html"))
-      TextAnalysis.htmlExtractDocs(
-        TextAnalysis.htmlExtractBlocks(page, lengthLow = 40,
-          lengthHigh = 120, stopLow = 0.06, stopHigh = 0.12,
-          maxLinkDensity = 0.25))
-        .orderBy("doc_id")
-    }),
+    "html_extract" -> ((s, dir) =>
+      jusText(seededPage(Tables.documents(s, dir)
+          .select(col("doc_id"), col("text"), col("source")),
+        secondPara = "<p>")).orderBy("doc_id")),
 
     // §2 #55c — CCNet capstone: the COMPLETE published CCNet chain
     // (Wenzek et al. 2020) as ONE declarative plan, every stage the
@@ -1950,24 +1923,8 @@ object SparkEntry {
     "ccnet_pipeline" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"), col("source"))
-      val ln2 = floor(length(col("text")) / 2).cast("int")
-      val page = d.select(col("doc_id"), concat(
-        lit("<html><head><title>Doc "), col("doc_id"), lit("</title>"),
-        lit("<style>p{color:red}</style><script>var x=1;</script></head><body>"),
-        lit("<nav><a href=\"/\">Home</a> <a href=\"/a\">Archive</a> " +
-          "<a href=\"/t\">Tags</a></nav>"),
-        lit("<h1>doc "), col("doc_id"), lit(" notes</h1>"),
-        lit("<p>"), col("text").substr(lit(1), ln2),
-        lit(" the of to in is it that and a an.</p>"),
-        lit("<p>subscribe to our newsletter today. "),
-        col("text").substr(ln2 + 1, length(col("text"))), lit("</p>"),
-        lit("<div>Share: <a href=\"#\">Tweet</a> <a href=\"#\">Like</a></div>"),
-        lit("<footer>copyright 2024 "), col("source"),
-        lit(" media group</footer>"), lit("</body></html>")).as("html"))
-      val extracted = TextAnalysis.htmlExtractDocs(
-        TextAnalysis.htmlExtractBlocks(page, lengthLow = 40,
-          lengthHigh = 120, stopLow = 0.06, stopHigh = 0.12,
-          maxLinkDensity = 0.25))
+      val extracted = jusText(seededPage(d,
+          secondPara = "<p>subscribe to our newsletter today. "))
         .where(col("n_good") > 0)
         .select(col("doc_id"), col("extracted_text").as("text"))
         .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -2005,21 +1962,10 @@ object SparkEntry {
     // shuffle into 4 shards. Every stage is the library operator itself,
     // not a re-implementation.
     "corpus_pipeline_v2" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val norm = d.withColumn("text", TextAnalysis.normalize(col("text")))
-      val benchmark = norm.where(col("doc_id") % 10 === 0)
-      val corpus = norm.where(col("doc_id") % 10 =!= 0)
-      val gated = TextAnalysis.gopherRules(corpus)
-        .where(col("pass_gopher") === 1).select("doc_id", "text")
-      val contaminated = Dedup.contaminationNgram(benchmark, gated, n = 8)
-        .where(col("share_frac") >= 0.3)
-        .select(col("test_id").as("doc_id"))
-      // stage boundary (same rationale as v3/v4): spanDedup consumes its
-      // input twice internally (span census + rebuild join), so the
-      // regex-heavy decontaminated prefix materializes once
-      val clean = gated.join(contaminated, Seq("doc_id"), "left_anti")
-        .stagePin()
-      val deduped = Dedup.spanDedup(clean).where(col("kept_text") =!= "")
+      val (benchmark, gated) = Curation.heldOutGopher(
+        Tables.documents(s, dir).select(col("doc_id"), col("text")))
+      val deduped = Dedup.spanDedup(Curation.decontaminate(benchmark, gated))
+        .where(col("kept_text") =!= "")
       Sampling.shardShuffle(deduped, "doc_id", nShards = 4, seed = "v2")
         .select(col("doc_id"), col("shard"), col("pos_in_shard"),
           col("n_spans"), col("n_removed"),
@@ -2038,52 +1984,11 @@ object SparkEntry {
     // end-to-end oracled in DuckDB including the recursive-closure
     // clustering and the n-gram LM weights.
     "corpus_pipeline_v3" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("source"))
-      val norm = d.withColumn("text", TextAnalysis.normalize(col("text")))
-      val benchmark = norm.where(col("doc_id") % 10 === 0)
-        .select("doc_id", "text")
-      val corpus = norm.where(col("doc_id") % 10 =!= 0)
-      val gated = TextAnalysis.gopherRules(corpus)
-        .where(col("pass_gopher") === 1).select("doc_id", "text", "source")
-      val contaminated =
-        Dedup.contaminationNgram(benchmark, gated.select("doc_id", "text"),
-            n = 8)
-          .where(col("share_frac") >= 0.3)
-          .select(col("test_id").as("doc_id"))
-      // first stage boundary: `clean` (the decontaminated per-doc prefix)
-      // is consumed TWICE by the span stage's single plan (spanDedup input
-      // + the source re-join), so without a materialization the
-      // regex-heavy normalize/gopher/8-gram prefix re-evaluates per
-      // reference inside one action (measured 3.4 -> 0.5+1.9 s warm at
-      // sf0.1 for the combined prefix+span stages)
-      val clean = gated.join(contaminated, Seq("doc_id"), "left_anti")
-        .stagePin()
-      // second stage boundary: everything above is a linear per-doc
-      // pipeline; everything below consumes it repeatedly (the clustering
-      // stage iterates, and `canon` fans out to selection AND the final
-      // join). Materialize ONCE — at lake scale these are the stage
-      // writes between the per-doc prefix and the cross-doc suffix that
-      // every published pipeline performs anyway; without them the
-      // 4-stage prefix would re-evaluate per consumer (measured 2.0x on
-      // the bench median, 18.7 -> 9.3 s at sf0.1).
-      val span = Dedup.spanDedup(clean.select("doc_id", "text"))
-        .where(col("kept_text") =!= "")
-        .join(clean.select("doc_id", "source"), "doc_id")
-        .stagePin()
-      val clusters = Cluster.nearDupClusters(
-          span.select(col("doc_id"), col("kept_text").as("text")))
-        .where(col("is_canonical") === 1)
-        .select(col("doc_id"), col("cluster_size"))
-      val canon = span.join(clusters, "doc_id")
-      val selected = Selection.importanceSample(
-          canon.select(col("doc_id"), col("kept_text").as("text"),
-            col("source")),
-          isTarget = col("source").isin("src0", "src1"), quantile = 0.5)
-        .where(col("kept") === 1)
-        .select(col("doc_id"), col("avg_log_weight"))
-      val kept = canon.join(selected, "doc_id")
-      Sampling.shardShuffle(kept, "doc_id", nShards = 4, seed = "v3")
+      val (benchmark, gated) = Curation.heldOutGopher(Tables.documents(s, dir)
+        .select(col("doc_id"), col("text"), col("source")))
+      val span =
+        Curation.spanDedupStage(Curation.decontaminate(benchmark, gated))
+      Curation.canonDsirShuffle(span, "kept_text", seed = "v3")
         .select(col("doc_id"), col("shard"), col("pos_in_shard"),
           col("cluster_size"), col("n_spans"), col("n_removed"),
           col("avg_log_weight"),
@@ -2100,56 +2005,11 @@ object SparkEntry {
     // stages, one run, end-to-end oracled (the trim joins v3's ~22-CTE
     // recursive oracle as four more CTEs).
     "corpus_pipeline_v4" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("source"))
-      val norm = d.withColumn("text", TextAnalysis.normalize(col("text")))
-      val benchmark = norm.where(col("doc_id") % 10 === 0)
-        .select("doc_id", "text")
-      val corpus = norm.where(col("doc_id") % 10 =!= 0)
-      val gated = TextAnalysis.gopherRules(corpus)
-        .where(col("pass_gopher") === 1).select("doc_id", "text", "source")
-      val contaminated =
-        Dedup.contaminationNgram(benchmark, gated.select("doc_id", "text"),
-            n = 8)
-          .where(col("share_frac") >= 0.3)
-          .select(col("test_id").as("doc_id"))
-      // same stage boundaries as v3: the decontaminated prefix
-      // materializes once before its double consumption in the span
-      // stage, and the span output once before the trim suffix
-      val clean = gated.join(contaminated, Seq("doc_id"), "left_anti")
-        .stagePin()
-      val span = Dedup.spanDedup(clean.select("doc_id", "text"))
-        .where(col("kept_text") =!= "")
-        .join(clean.select("doc_id", "source"), "doc_id")
-        .stagePin()
-      // NEW stage: corpus-wide repeated-gram trim on the span-dedup
-      // survivors; fully-boilerplate docs (trimmed to nothing) drop here
-      val trimmed = Dedup.repeatedNgramTrim(
-          span.select(col("doc_id"), col("kept_text").as("text")),
-          n = 10, minCount = 2)
-        .select(col("doc_id"),
-          col("n_removed_tokens").as("n_trim_removed"),
-          col("kept_text").as("trim_text"))
-        .where(col("trim_text") =!= "")
-      // second stage boundary: the trim output fans out to the iterating
-      // clustering loop, the selection LM, and the final join
-      val stage = trimmed
-        .join(span.select("doc_id", "source", "n_spans", "n_removed"),
-          "doc_id")
-        .stagePin()
-      val clusters = Cluster.nearDupClusters(
-          stage.select(col("doc_id"), col("trim_text").as("text")))
-        .where(col("is_canonical") === 1)
-        .select(col("doc_id"), col("cluster_size"))
-      val canon = stage.join(clusters, "doc_id")
-      val selected = Selection.importanceSample(
-          canon.select(col("doc_id"), col("trim_text").as("text"),
-            col("source")),
-          isTarget = col("source").isin("src0", "src1"), quantile = 0.5)
-        .where(col("kept") === 1)
-        .select(col("doc_id"), col("avg_log_weight"))
-      val kept = canon.join(selected, "doc_id")
-      Sampling.shardShuffle(kept, "doc_id", nShards = 4, seed = "v4")
+      val (benchmark, gated) = Curation.heldOutGopher(Tables.documents(s, dir)
+        .select(col("doc_id"), col("text"), col("source")))
+      val stage = Curation.trimStage(
+        Curation.spanDedupStage(Curation.decontaminate(benchmark, gated)))
+      Curation.canonDsirShuffle(stage, "trim_text", seed = "v4")
         .select(col("doc_id"), col("shard"), col("pos_in_shard"),
           col("cluster_size"), col("n_spans"), col("n_removed"),
           col("n_trim_removed"), col("avg_log_weight"),
@@ -2179,13 +2039,7 @@ object SparkEntry {
       val urls = Dedup.urlKeepBest(d.withColumn("url", synthUrl),
           col("url"), quality = col("n_chars"))
         .select(col("keep_id").as("doc_id"))
-      val norm = d.join(urls, "doc_id")
-        .withColumn("text", TextAnalysis.normalize(col("text")))
-      val benchmark = norm.where(col("doc_id") % 10 === 0)
-        .select("doc_id", "text")
-      val corpus = norm.where(col("doc_id") % 10 =!= 0)
-      val gated = TextAnalysis.gopherRules(corpus)
-        .where(col("pass_gopher") === 1).select("doc_id", "text", "source")
+      val (benchmark, gated) = Curation.heldOutGopher(d.join(urls, "doc_id"))
       // NEW stage: line-wise corrections — flagged lines removed, docs
       // whose flagged lines carry > half their chars drop
       val lined = TextAnalysis.lineQualityRules(gated,
@@ -2194,42 +2048,9 @@ object SparkEntry {
         .select(col("doc_id"), col("kept_text").as("text"),
           col("n_flagged").as("n_line_flagged"))
         .join(gated.select("doc_id", "source"), "doc_id")
-      val contaminated =
-        Dedup.contaminationNgram(benchmark, lined.select("doc_id", "text"),
-            n = 8)
-          .where(col("share_frac") >= 0.3)
-          .select(col("test_id").as("doc_id"))
-      // same stage boundaries as v3/v4
-      val clean = lined.join(contaminated, Seq("doc_id"), "left_anti")
-        .stagePin()
-      val span = Dedup.spanDedup(clean.select("doc_id", "text"))
-        .where(col("kept_text") =!= "")
-        .join(clean.select("doc_id", "source", "n_line_flagged"), "doc_id")
-        .stagePin()
-      val trimmed = Dedup.repeatedNgramTrim(
-          span.select(col("doc_id"), col("kept_text").as("text")),
-          n = 10, minCount = 2)
-        .select(col("doc_id"),
-          col("n_removed_tokens").as("n_trim_removed"),
-          col("kept_text").as("trim_text"))
-        .where(col("trim_text") =!= "")
-      val stage = trimmed
-        .join(span.select("doc_id", "source", "n_spans", "n_removed",
-          "n_line_flagged"), "doc_id")
-        .stagePin()
-      val clusters = Cluster.nearDupClusters(
-          stage.select(col("doc_id"), col("trim_text").as("text")))
-        .where(col("is_canonical") === 1)
-        .select(col("doc_id"), col("cluster_size"))
-      val canon = stage.join(clusters, "doc_id")
-      val selected = Selection.importanceSample(
-          canon.select(col("doc_id"), col("trim_text").as("text"),
-            col("source")),
-          isTarget = col("source").isin("src0", "src1"), quantile = 0.5)
-        .where(col("kept") === 1)
-        .select(col("doc_id"), col("avg_log_weight"))
-      val kept = canon.join(selected, "doc_id")
-      Sampling.shardShuffle(kept, "doc_id", nShards = 4, seed = "v5")
+      val stage = Curation.trimStage(
+        Curation.spanDedupStage(Curation.decontaminate(benchmark, lined)))
+      Curation.canonDsirShuffle(stage, "trim_text", seed = "v5")
         .select(col("doc_id"), col("shard"), col("pos_in_shard"),
           col("cluster_size"), col("n_spans"), col("n_removed"),
           col("n_line_flagged"), col("n_trim_removed"),
@@ -2302,15 +2123,15 @@ object SparkEntry {
         .select((col("doc_id") + 1000000).as("doc_id"),
           concat_ws(" ",
             slice(toks, lit(1), greatest(size(toks) - 2, lit(0)))).as("text"))
-      // pinBatchFp: the batch winnow subtree feeds every consumer branch
-      // (semi-filter build, df census, both pair sides, batch sizes) —
-      // exchange reuse already dedupes its EXECUTION, but the replicated
-      // subtree made this the repo's largest static plan (698 nodes, 42
-      // winnow copies) and every AQE round re-processed it; the pin
-      // truncates the plan (191k -> ~30k chars). OptProbe
-      // winnow_inc_pin_ab: ~-0.6 s/key at sf0.1 (paired, warm)
+      // the operator pins its batch fingerprint relation: that subtree
+      // feeds every consumer branch (semi-filter build, df census, both
+      // pair sides, batch sizes) — exchange reuse already dedupes its
+      // EXECUTION, but the replicated subtree made this the repo's largest
+      // static plan (698 nodes, 42 winnow copies) and every AQE round
+      // re-processed it; the pin truncates the plan (191k -> 103k chars,
+      // ~-0.6 s/key warm at sf0.1: OPTIMIZATION_r18.md item 10)
       Dedup.winnowCandidatesIncremental(batch, fpIndex,
-          k = 3, w = 4, maxDf = 10, minShared = 2, pinBatchFp = true)
+          k = 3, w = 4, maxDf = 10, minShared = 2)
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -3791,6 +3612,249 @@ object SparkEntry {
       case _: StringIndexOutOfBoundsException => sql
     }
   }
+
+  // DuckDB fragments of the curation chain and the jusText stage, shared
+  // by the capstone, ccnet_pipeline, html_extract and text_normalize
+  // oracles. They are MARGIN text: the composing oracle strips them once.
+  // A pre-stripped fragment spliced into a stripMargin template would be
+  // stripped twice, and its lines that open with `||` would lose a `|`.
+  // `raw` keeps the regex backslashes literal (so a literal $ is $$).
+
+  /** The C4 normalization of column `in` (mirrors TextAnalysis.normalize):
+    * strip tags → unescape → blank control chars → collapse → trim. */
+  private def normSql(in: String): String =
+    raw"""trim(regexp_replace(
+      |           regexp_replace(
+      |             regexp_replace(
+      |               regexp_replace(
+      |                 regexp_replace(
+      |                   regexp_replace($in, '<[^>]*>', ' ', 'g'),
+      |                 '&lt;', '<', 'g'),
+      |               '&gt;', '>', 'g'),
+      |             '&amp;', '&', 'g'),
+      |           '[\x00-\x1f]', ' ', 'g'),
+      |         '\s+', ' ', 'g'))"""
+
+  /** normalize → held-out split (`bench`: every 10th doc) → Gopher gate
+    * (`gate`) over the docs of `src`. */
+  private def gateSql(src: String): String =
+    raw"""norm AS (
+      |  SELECT doc_id,
+      |         ${normSql("text")} AS text
+      |  FROM $src),
+      |bench AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 = 0),
+      |corp AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 <> 0),
+      |gt AS (
+      |  SELECT doc_id, text,
+      |         list_filter(string_split_regex(trim(text), '\s+'),
+      |                     x -> x <> '') AS toks
+      |  FROM corp),
+      |gate AS (
+      |  SELECT doc_id, text FROM gt
+      |  WHERE len(toks) BETWEEN 50 AND 100000
+      |    AND coalesce(CAST(list_sum(list_transform(toks,
+      |          x -> length(x))) AS DOUBLE) / nullif(len(toks), 0)
+      |        BETWEEN 3.0 AND 10.0, false)
+      |    AND coalesce(CAST(length(text)
+      |          - length(replace(text, '#', ''))
+      |          + (length(text) - length(replace(text, '...', ''))) // 3
+      |          AS DOUBLE) / nullif(len(toks), 0) <= 0.1, false)
+      |    AND coalesce(CAST(len(list_filter(toks,
+      |          x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
+      |        / nullif(len(toks), 0) >= 0.8, false))"""
+
+  /** 8-gram decontamination of `src` against `bench` (`clean`), then
+    * span-grain exact dedup (`sd`: n_spans, n_removed, kept_text). */
+  private def decontamSpanSql(src: String): String =
+    raw"""bg AS (
+      |  SELECT DISTINCT unnest(
+      |           CASE WHEN len(w) >= 8 THEN
+      |             list_distinct(list_transform(range(len(w) - 7),
+      |               i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
+      |                    w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
+      |                    w[i+7] || ' ' || w[i+8]))
+      |           ELSE [array_to_string(w, ' ')] END) AS g
+      |  FROM (SELECT string_split_regex(lower(text), '\s+') AS w
+      |        FROM bench)),
+      |cg AS (
+      |  SELECT doc_id, len(sh) AS n, unnest(sh) AS g
+      |  FROM (SELECT doc_id,
+      |          CASE WHEN len(w) >= 8 THEN
+      |            list_distinct(list_transform(range(len(w) - 7),
+      |              i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
+      |                   w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
+      |                   w[i+7] || ' ' || w[i+8]))
+      |          ELSE [array_to_string(w, ' ')] END AS sh
+      |        FROM (SELECT doc_id, string_split_regex(lower(text), '\s+')
+      |                AS w FROM $src))),
+      |contaminated AS (
+      |  SELECT cg.doc_id FROM cg JOIN bg ON bg.g = cg.g
+      |  GROUP BY cg.doc_id, cg.n
+      |  HAVING round(count(*) * 1.0 / cg.n, 6) >= 0.3),
+      |clean AS (
+      |  SELECT doc_id, text FROM $src
+      |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
+      |sp AS (
+      |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS pos,
+      |         unnest(pieces) AS span
+      |  FROM (SELECT doc_id, string_split_regex(text, '\. ') AS pieces
+      |        FROM clean)),
+      |flag AS (
+      |  SELECT doc_id, pos, span,
+      |         row_number() OVER (PARTITION BY lower(trim(span))
+      |                            ORDER BY doc_id, pos) AS rn
+      |  FROM sp),
+      |sd AS (
+      |  SELECT doc_id,
+      |         CAST(count(*) AS BIGINT) AS n_spans,
+      |         CAST(sum(CASE WHEN rn = 1 THEN 0 ELSE 1 END) AS BIGINT)
+      |           AS n_removed,
+      |         coalesce(string_agg(CASE WHEN rn = 1 THEN span END, '. '
+      |                             ORDER BY pos), '') AS kept_text
+      |  FROM flag GROUP BY 1)"""
+
+  /** Repeated-10-gram trim of `sv`.kept_text (`trv`: n_trim_removed,
+    * trim_text; fully trimmed docs drop). */
+  private def trimSql: String =
+    raw"""trt AS (
+      |  SELECT doc_id, string_split_regex(kept_text, '\s+') AS w,
+      |         string_split_regex(lower(kept_text), '\s+') AS lw
+      |  FROM sv),
+      |trp AS (
+      |  SELECT doc_id, s['pos'] AS pos, s['gram'] AS gram FROM (
+      |    SELECT doc_id, unnest(list_transform(range(len(lw) - 9),
+      |      i -> {'pos': i + 1,
+      |            'gram': array_to_string(lw[i+1:i+10], ' ')})) AS s
+      |    FROM trt WHERE len(lw) >= 10)),
+      |trdup AS (SELECT gram FROM trp GROUP BY gram HAVING count(*) >= 2),
+      |trst AS (SELECT doc_id, list_sort(list(pos)) AS starts
+      |         FROM trp JOIN trdup USING (gram) GROUP BY doc_id),
+      |trj AS (SELECT trt.doc_id, w,
+      |          coalesce(trst.starts, CAST([] AS BIGINT[])) AS starts
+      |        FROM trt LEFT JOIN trst ON trt.doc_id = trst.doc_id),
+      |trk AS (SELECT doc_id, len(w) AS n_tokens,
+      |          list_filter(list_transform(range(len(w)),
+      |              q -> {'p': q + 1, 'tok': w[CAST(q + 1 AS INTEGER)]}),
+      |            s -> len(list_filter(starts,
+      |              z -> s['p'] >= z AND s['p'] < z + 10)) = 0) AS kept
+      |        FROM trj),
+      |trv AS (
+      |  SELECT doc_id,
+      |         CAST(n_tokens - len(kept) AS INTEGER) AS n_trim_removed,
+      |         array_to_string(list_transform(kept, s -> s['tok']), ' ')
+      |           AS trim_text
+      |  FROM trk
+      |  WHERE len(kept) > 0)"""
+
+  /** Near-dup clusters over `src`.`textCol`: 5-shingle rare-shingle
+    * blocking → Jaccard ≥ 0.5 → recursive closure (`lab3`, `sz3`). */
+  private def clusterSql(src: String, textCol: String): String =
+    raw"""tk3 AS (
+      |  SELECT doc_id,
+      |         string_split_regex(lower($textCol), '\s+') AS toks
+      |  FROM $src),
+      |sha3 AS (
+      |  SELECT doc_id,
+      |         CASE WHEN len(toks) >= 5 THEN
+      |             list_distinct(list_transform(range(len(toks) - 4),
+      |               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
+      |                    || ' ' || toks[i+4] || ' ' || toks[i+5]))
+      |           ELSE [array_to_string(toks, ' ')] END AS sharr
+      |  FROM tk3),
+      |sh3 AS (SELECT doc_id, unnest(sharr) AS s FROM sha3),
+      |dfq3 AS (SELECT s FROM sh3 GROUP BY s HAVING count(*) BETWEEN 2 AND 5),
+      |r3 AS (SELECT sh3.doc_id, sh3.s FROM sh3 JOIN dfq3 USING (s)),
+      |cand3 AS (
+      |  SELECT a.doc_id AS id1, b.doc_id AS id2
+      |  FROM r3 a JOIN r3 b USING (s) WHERE a.doc_id < b.doc_id
+      |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      |e3 AS (
+      |  SELECT c.id1, c.id2
+      |  FROM cand3 c
+      |  JOIN sha3 x ON x.doc_id = c.id1
+      |  JOIN sha3 y ON y.doc_id = c.id2
+      |  WHERE CAST(len(list_intersect(x.sharr, y.sharr)) AS DOUBLE)
+      |        / nullif(len(list_distinct(list_concat(x.sharr, y.sharr))), 0)
+      |        >= 0.5),
+      |sym3 AS (SELECT id1 AS src, id2 AS dst FROM e3
+      |         UNION ALL SELECT id2, id1 FROM e3),
+      |reach3(id, root) AS (
+      |  SELECT doc_id, doc_id FROM $src
+      |  UNION
+      |  SELECT sym3.dst, reach3.root
+      |  FROM reach3 JOIN sym3 ON sym3.src = reach3.id),
+      |lab3 AS (SELECT id AS doc_id, min(root) AS cluster_id
+      |         FROM reach3 GROUP BY 1),
+      |sz3 AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
+      |        FROM lab3 GROUP BY 1)"""
+
+  /** DSIR weights of `canon`.`textCol` with src0/src1 as the target, and
+    * their median cut (`iw3`, `thr3`). */
+  private def dsirSql(textCol: String): String =
+    raw"""tok3 AS (
+      |  SELECT doc_id, source IN ('src0','src1') AS tgt,
+      |         unnest(string_split_regex(lower($textCol), '\s+')) AS w
+      |  FROM canon),
+      |lm3 AS (
+      |  SELECT w, count(*) AS cr,
+      |         sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct
+      |  FROM tok3 GROUP BY 1),
+      |tot3 AS (SELECT sum(cr) AS nr, sum(ct) AS nt, count(*) AS v FROM lm3),
+      |pd3 AS (SELECT doc_id, w, count(*) AS c FROM tok3 GROUP BY 1, 2),
+      |iw3 AS (
+      |  SELECT pd3.doc_id,
+      |         round(sum(pd3.c * (ln((lm3.ct + 1.0) / (tot3.nt + 1.0 * tot3.v))
+      |                   - ln((lm3.cr + 1.0) / (tot3.nr + 1.0 * tot3.v))))
+      |               / sum(pd3.c), 6) + 0.0 AS avg_log_weight
+      |  FROM pd3 JOIN lm3 USING (w) CROSS JOIN tot3
+      |  GROUP BY 1),
+      |thr3 AS (SELECT quantile_cont(avg_log_weight, 0.5) AS thr FROM iw3)"""
+
+  /** jusText segmentation of `page`: script/style strip, block split,
+    * per-block normalized text (`nb`). */
+  private def jusTextBlocksSql: String =
+    raw"""ns AS (
+      |  SELECT doc_id,
+      |         regexp_replace(regexp_replace(html,
+      |           '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
+      |           '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS h
+      |  FROM page),
+      |bl AS (
+      |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS block_idx,
+      |         unnest(pieces) AS raw
+      |  FROM (SELECT doc_id, string_split(regexp_replace(h,
+      |          '(?i)</?(?:header|head|footer|title|html|body|table|tr|td|section|article|nav|div|p|h[1-6]|li|ul|ol|br)\b[^>]*>',
+      |          chr(1), 'g'), chr(1)) AS pieces
+      |        FROM ns)),
+      |nb AS (
+      |  SELECT doc_id, block_idx, raw,
+      |         ${normSql("raw")} AS block_text
+      |  FROM bl)"""
+
+  /** jusText classes of the scored blocks `sc`: free class, then
+    * neighbour rescue of short/near-good blocks (`fin`). */
+  private def jusTextClassSql: String =
+    raw"""cf AS (
+      |  SELECT *, CASE WHEN link_density > 0.25 THEN 'bad'
+      |                 WHEN n_chars < 40 THEN 'short'
+      |                 WHEN stop_frac >= 0.12 AND n_chars >= 120 THEN 'good'
+      |                 WHEN stop_frac >= 0.06 THEN 'neargood'
+      |                 ELSE 'bad' END AS cls_free
+      |  FROM sc),
+      |cx AS (
+      |  SELECT *,
+      |         last_value(CASE WHEN cls_free IN ('good','bad') THEN cls_free END IGNORE NULLS)
+      |           OVER (PARTITION BY doc_id ORDER BY block_idx
+      |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_def,
+      |         first_value(CASE WHEN cls_free IN ('good','bad') THEN cls_free END IGNORE NULLS)
+      |           OVER (PARTITION BY doc_id ORDER BY block_idx
+      |                 ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_def
+      |  FROM cf),
+      |fin AS (
+      |  SELECT *, CASE WHEN cls_free IN ('good','bad') THEN cls_free
+      |                 WHEN prev_def = 'good' OR next_def = 'good' THEN 'good'
+      |                 ELSE 'bad' END AS cls_final
+      |  FROM cx)"""
 
   private def oracleSqlRaw: Map[String, String] = Map(
     "ichimoku_mtf" ->
@@ -6057,86 +6121,8 @@ object SparkEntry {
         |ORDER BY 1""".stripMargin,
 
     "corpus_pipeline_v2" ->
-      """WITH norm AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(
-        |               regexp_replace(
-        |                 regexp_replace(
-        |                   regexp_replace(text, '<[^>]*>', ' ', 'g'),
-        |                 '&lt;', '<', 'g'),
-        |               '&gt;', '>', 'g'),
-        |             '&amp;', '&', 'g'),
-        |           '[\x00-\x1f]', ' ', 'g'),
-        |         '\s+', ' ', 'g')) AS text
-        |  FROM documents),
-        |bench AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 = 0),
-        |corp AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 <> 0),
-        |gt AS (
-        |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> x <> '') AS toks
-        |  FROM corp),
-        |gate AS (
-        |  SELECT doc_id, text FROM gt
-        |  WHERE len(toks) BETWEEN 50 AND 100000
-        |    AND coalesce(CAST(list_sum(list_transform(toks,
-        |          x -> length(x))) AS DOUBLE) / nullif(len(toks), 0)
-        |        BETWEEN 3.0 AND 10.0, false)
-        |    AND coalesce(CAST(length(text)
-        |          - length(replace(text, '#', ''))
-        |          + (length(text) - length(replace(text, '...', ''))) // 3
-        |          AS DOUBLE) / nullif(len(toks), 0) <= 0.1, false)
-        |    AND coalesce(CAST(len(list_filter(toks,
-        |          x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-        |        / nullif(len(toks), 0) >= 0.8, false)),
-        |bg AS (
-        |  SELECT DISTINCT unnest(
-        |           CASE WHEN len(w) >= 8 THEN
-        |             list_distinct(list_transform(range(len(w) - 7),
-        |               i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                    w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                    w[i+7] || ' ' || w[i+8]))
-        |           ELSE [array_to_string(w, ' ')] END) AS g
-        |  FROM (SELECT string_split_regex(lower(text), '\s+') AS w
-        |        FROM bench)),
-        |cg AS (
-        |  SELECT doc_id, len(sh) AS n, unnest(sh) AS g
-        |  FROM (SELECT doc_id,
-        |          CASE WHEN len(w) >= 8 THEN
-        |            list_distinct(list_transform(range(len(w) - 7),
-        |              i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                   w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                   w[i+7] || ' ' || w[i+8]))
-        |          ELSE [array_to_string(w, ' ')] END AS sh
-        |        FROM (SELECT doc_id, string_split_regex(lower(text), '\s+')
-        |                AS w FROM gate))),
-        |contaminated AS (
-        |  SELECT cg.doc_id FROM cg JOIN bg ON bg.g = cg.g
-        |  GROUP BY cg.doc_id, cg.n
-        |  HAVING round(count(*) * 1.0 / cg.n, 6) >= 0.3),
-        |clean AS (
-        |  SELECT doc_id, text FROM gate
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        |sp AS (
-        |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS pos,
-        |         unnest(pieces) AS span
-        |  FROM (SELECT doc_id, string_split_regex(text, '\. ') AS pieces
-        |        FROM clean)),
-        |flag AS (
-        |  SELECT doc_id, pos, span,
-        |         row_number() OVER (PARTITION BY lower(trim(span))
-        |                            ORDER BY doc_id, pos) AS rn
-        |  FROM sp),
-        |sd AS (
-        |  SELECT doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_spans,
-        |         CAST(sum(CASE WHEN rn = 1 THEN 0 ELSE 1 END) AS BIGINT)
-        |           AS n_removed,
-        |         coalesce(string_agg(CASE WHEN rn = 1 THEN span END, '. '
-        |                             ORDER BY pos), '') AS kept_text
-        |  FROM flag GROUP BY 1),
+      raw"""WITH ${gateSql("documents")},
+        |${decontamSpanSql("gate")},
         |sk AS (
         |  SELECT doc_id, n_spans, n_removed, kept_text,
         |         md5('v2' || ':' || CAST(doc_id AS VARCHAR)) AS skey
@@ -6153,152 +6139,20 @@ object SparkEntry {
         |         AS n_tokens
         |FROM sh2 ORDER BY 2, 3""".stripMargin,
 
-        "corpus_pipeline_v3" ->
-      """WITH RECURSIVE norm AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(
-        |               regexp_replace(
-        |                 regexp_replace(
-        |                   regexp_replace(text, '<[^>]*>', ' ', 'g'),
-        |                 '&lt;', '<', 'g'),
-        |               '&gt;', '>', 'g'),
-        |             '&amp;', '&', 'g'),
-        |           '[\x00-\x1f]', ' ', 'g'),
-        |         '\s+', ' ', 'g')) AS text
-        |  FROM documents),
-        |bench AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 = 0),
-        |corp AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 <> 0),
-        |gt AS (
-        |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> x <> '') AS toks
-        |  FROM corp),
-        |gate AS (
-        |  SELECT doc_id, text FROM gt
-        |  WHERE len(toks) BETWEEN 50 AND 100000
-        |    AND coalesce(CAST(list_sum(list_transform(toks,
-        |          x -> length(x))) AS DOUBLE) / nullif(len(toks), 0)
-        |        BETWEEN 3.0 AND 10.0, false)
-        |    AND coalesce(CAST(length(text)
-        |          - length(replace(text, '#', ''))
-        |          + (length(text) - length(replace(text, '...', ''))) // 3
-        |          AS DOUBLE) / nullif(len(toks), 0) <= 0.1, false)
-        |    AND coalesce(CAST(len(list_filter(toks,
-        |          x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-        |        / nullif(len(toks), 0) >= 0.8, false)),
-        |bg AS (
-        |  SELECT DISTINCT unnest(
-        |           CASE WHEN len(w) >= 8 THEN
-        |             list_distinct(list_transform(range(len(w) - 7),
-        |               i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                    w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                    w[i+7] || ' ' || w[i+8]))
-        |           ELSE [array_to_string(w, ' ')] END) AS g
-        |  FROM (SELECT string_split_regex(lower(text), '\s+') AS w
-        |        FROM bench)),
-        |cg AS (
-        |  SELECT doc_id, len(sh) AS n, unnest(sh) AS g
-        |  FROM (SELECT doc_id,
-        |          CASE WHEN len(w) >= 8 THEN
-        |            list_distinct(list_transform(range(len(w) - 7),
-        |              i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                   w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                   w[i+7] || ' ' || w[i+8]))
-        |          ELSE [array_to_string(w, ' ')] END AS sh
-        |        FROM (SELECT doc_id, string_split_regex(lower(text), '\s+')
-        |                AS w FROM gate))),
-        |contaminated AS (
-        |  SELECT cg.doc_id FROM cg JOIN bg ON bg.g = cg.g
-        |  GROUP BY cg.doc_id, cg.n
-        |  HAVING round(count(*) * 1.0 / cg.n, 6) >= 0.3),
-        |clean AS (
-        |  SELECT doc_id, text FROM gate
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        |sp AS (
-        |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS pos,
-        |         unnest(pieces) AS span
-        |  FROM (SELECT doc_id, string_split_regex(text, '\. ') AS pieces
-        |        FROM clean)),
-        |flag AS (
-        |  SELECT doc_id, pos, span,
-        |         row_number() OVER (PARTITION BY lower(trim(span))
-        |                            ORDER BY doc_id, pos) AS rn
-        |  FROM sp),
-        |sd AS (
-        |  SELECT doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_spans,
-        |         CAST(sum(CASE WHEN rn = 1 THEN 0 ELSE 1 END) AS BIGINT)
-        |           AS n_removed,
-        |         coalesce(string_agg(CASE WHEN rn = 1 THEN span END, '. '
-        |                             ORDER BY pos), '') AS kept_text
-        |  FROM flag GROUP BY 1),
+    "corpus_pipeline_v3" ->
+      raw"""WITH RECURSIVE ${gateSql("documents")},
+        |${decontamSpanSql("gate")},
         |sv AS (
         |  SELECT sd.doc_id, sd.n_spans, sd.n_removed, sd.kept_text,
         |         d.source
         |  FROM sd JOIN documents d USING (doc_id)
         |  WHERE sd.kept_text <> ''),
-        |tk3 AS (
-        |  SELECT doc_id,
-        |         string_split_regex(lower(kept_text), '\s+') AS toks
-        |  FROM sv),
-        |sha3 AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(toks) >= 5 THEN
-        |             list_distinct(list_transform(range(len(toks) - 4),
-        |               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
-        |                    || ' ' || toks[i+4] || ' ' || toks[i+5]))
-        |           ELSE [array_to_string(toks, ' ')] END AS sharr
-        |  FROM tk3),
-        |sh3 AS (SELECT doc_id, unnest(sharr) AS s FROM sha3),
-        |dfq3 AS (SELECT s FROM sh3 GROUP BY s HAVING count(*) BETWEEN 2 AND 5),
-        |r3 AS (SELECT sh3.doc_id, sh3.s FROM sh3 JOIN dfq3 USING (s)),
-        |cand3 AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM r3 a JOIN r3 b USING (s) WHERE a.doc_id < b.doc_id
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e3 AS (
-        |  SELECT c.id1, c.id2
-        |  FROM cand3 c
-        |  JOIN sha3 x ON x.doc_id = c.id1
-        |  JOIN sha3 y ON y.doc_id = c.id2
-        |  WHERE CAST(len(list_intersect(x.sharr, y.sharr)) AS DOUBLE)
-        |        / nullif(len(list_distinct(list_concat(x.sharr, y.sharr))), 0)
-        |        >= 0.5),
-        |sym3 AS (SELECT id1 AS src, id2 AS dst FROM e3
-        |         UNION ALL SELECT id2, id1 FROM e3),
-        |reach3(id, root) AS (
-        |  SELECT doc_id, doc_id FROM sv
-        |  UNION
-        |  SELECT sym3.dst, reach3.root
-        |  FROM reach3 JOIN sym3 ON sym3.src = reach3.id),
-        |lab3 AS (SELECT id AS doc_id, min(root) AS cluster_id
-        |         FROM reach3 GROUP BY 1),
-        |sz3 AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-        |        FROM lab3 GROUP BY 1),
+        |${clusterSql("sv", "kept_text")},
         |canon AS (
         |  SELECT sv.*, sz3.cluster_size
         |  FROM sv JOIN lab3 USING (doc_id) JOIN sz3 USING (cluster_id)
         |  WHERE sv.doc_id = lab3.cluster_id),
-        |tok3 AS (
-        |  SELECT doc_id, source IN ('src0','src1') AS tgt,
-        |         unnest(string_split_regex(lower(kept_text), '\s+')) AS w
-        |  FROM canon),
-        |lm3 AS (
-        |  SELECT w, count(*) AS cr,
-        |         sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct
-        |  FROM tok3 GROUP BY 1),
-        |tot3 AS (SELECT sum(cr) AS nr, sum(ct) AS nt, count(*) AS v FROM lm3),
-        |pd3 AS (SELECT doc_id, w, count(*) AS c FROM tok3 GROUP BY 1, 2),
-        |iw3 AS (
-        |  SELECT pd3.doc_id,
-        |         round(sum(pd3.c * (ln((lm3.ct + 1.0) / (tot3.nt + 1.0 * tot3.v))
-        |                   - ln((lm3.cr + 1.0) / (tot3.nr + 1.0 * tot3.v))))
-        |               / sum(pd3.c), 6) + 0.0 AS avg_log_weight
-        |  FROM pd3 JOIN lm3 USING (w) CROSS JOIN tot3
-        |  GROUP BY 1),
-        |thr3 AS (SELECT quantile_cont(avg_log_weight, 0.5) AS thr FROM iw3),
+        |${dsirSql("kept_text")},
         |fin AS (
         |  SELECT c.doc_id, c.n_spans, c.n_removed, c.kept_text,
         |         c.cluster_size, i.avg_log_weight,
@@ -6319,182 +6173,22 @@ object SparkEntry {
         |FROM sh23 ORDER BY 2, 3""".stripMargin,
 
     "corpus_pipeline_v4" ->
-      """WITH RECURSIVE norm AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(
-        |               regexp_replace(
-        |                 regexp_replace(
-        |                   regexp_replace(text, '<[^>]*>', ' ', 'g'),
-        |                 '&lt;', '<', 'g'),
-        |               '&gt;', '>', 'g'),
-        |             '&amp;', '&', 'g'),
-        |           '[\x00-\x1f]', ' ', 'g'),
-        |         '\s+', ' ', 'g')) AS text
-        |  FROM documents),
-        |bench AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 = 0),
-        |corp AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 <> 0),
-        |gt AS (
-        |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> x <> '') AS toks
-        |  FROM corp),
-        |gate AS (
-        |  SELECT doc_id, text FROM gt
-        |  WHERE len(toks) BETWEEN 50 AND 100000
-        |    AND coalesce(CAST(list_sum(list_transform(toks,
-        |          x -> length(x))) AS DOUBLE) / nullif(len(toks), 0)
-        |        BETWEEN 3.0 AND 10.0, false)
-        |    AND coalesce(CAST(length(text)
-        |          - length(replace(text, '#', ''))
-        |          + (length(text) - length(replace(text, '...', ''))) // 3
-        |          AS DOUBLE) / nullif(len(toks), 0) <= 0.1, false)
-        |    AND coalesce(CAST(len(list_filter(toks,
-        |          x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-        |        / nullif(len(toks), 0) >= 0.8, false)),
-        |bg AS (
-        |  SELECT DISTINCT unnest(
-        |           CASE WHEN len(w) >= 8 THEN
-        |             list_distinct(list_transform(range(len(w) - 7),
-        |               i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                    w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                    w[i+7] || ' ' || w[i+8]))
-        |           ELSE [array_to_string(w, ' ')] END) AS g
-        |  FROM (SELECT string_split_regex(lower(text), '\s+') AS w
-        |        FROM bench)),
-        |cg AS (
-        |  SELECT doc_id, len(sh) AS n, unnest(sh) AS g
-        |  FROM (SELECT doc_id,
-        |          CASE WHEN len(w) >= 8 THEN
-        |            list_distinct(list_transform(range(len(w) - 7),
-        |              i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                   w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                   w[i+7] || ' ' || w[i+8]))
-        |          ELSE [array_to_string(w, ' ')] END AS sh
-        |        FROM (SELECT doc_id, string_split_regex(lower(text), '\s+')
-        |                AS w FROM gate))),
-        |contaminated AS (
-        |  SELECT cg.doc_id FROM cg JOIN bg ON bg.g = cg.g
-        |  GROUP BY cg.doc_id, cg.n
-        |  HAVING round(count(*) * 1.0 / cg.n, 6) >= 0.3),
-        |clean AS (
-        |  SELECT doc_id, text FROM gate
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        |sp AS (
-        |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS pos,
-        |         unnest(pieces) AS span
-        |  FROM (SELECT doc_id, string_split_regex(text, '\. ') AS pieces
-        |        FROM clean)),
-        |flag AS (
-        |  SELECT doc_id, pos, span,
-        |         row_number() OVER (PARTITION BY lower(trim(span))
-        |                            ORDER BY doc_id, pos) AS rn
-        |  FROM sp),
-        |sd AS (
-        |  SELECT doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_spans,
-        |         CAST(sum(CASE WHEN rn = 1 THEN 0 ELSE 1 END) AS BIGINT)
-        |           AS n_removed,
-        |         coalesce(string_agg(CASE WHEN rn = 1 THEN span END, '. '
-        |                             ORDER BY pos), '') AS kept_text
-        |  FROM flag GROUP BY 1),
+      raw"""WITH RECURSIVE ${gateSql("documents")},
+        |${decontamSpanSql("gate")},
         |sv AS (
         |  SELECT sd.doc_id, sd.n_spans, sd.n_removed, sd.kept_text,
         |         d.source
         |  FROM sd JOIN documents d USING (doc_id)
         |  WHERE sd.kept_text <> ''),
-        |trt AS (
-        |  SELECT doc_id, string_split_regex(kept_text, '\s+') AS w,
-        |         string_split_regex(lower(kept_text), '\s+') AS lw
-        |  FROM sv),
-        |trp AS (
-        |  SELECT doc_id, s['pos'] AS pos, s['gram'] AS gram FROM (
-        |    SELECT doc_id, unnest(list_transform(range(len(lw) - 9),
-        |      i -> {'pos': i + 1,
-        |            'gram': array_to_string(lw[i+1:i+10], ' ')})) AS s
-        |    FROM trt WHERE len(lw) >= 10)),
-        |trdup AS (SELECT gram FROM trp GROUP BY gram HAVING count(*) >= 2),
-        |trst AS (SELECT doc_id, list_sort(list(pos)) AS starts
-        |         FROM trp JOIN trdup USING (gram) GROUP BY doc_id),
-        |trj AS (SELECT trt.doc_id, w,
-        |          coalesce(trst.starts, CAST([] AS BIGINT[])) AS starts
-        |        FROM trt LEFT JOIN trst ON trt.doc_id = trst.doc_id),
-        |trk AS (SELECT doc_id, len(w) AS n_tokens,
-        |          list_filter(list_transform(range(len(w)),
-        |              q -> {'p': q + 1, 'tok': w[CAST(q + 1 AS INTEGER)]}),
-        |            s -> len(list_filter(starts,
-        |              z -> s['p'] >= z AND s['p'] < z + 10)) = 0) AS kept
-        |        FROM trj),
-        |trv AS (
-        |  SELECT doc_id,
-        |         CAST(n_tokens - len(kept) AS INTEGER) AS n_trim_removed,
-        |         array_to_string(list_transform(kept, s -> s['tok']), ' ')
-        |           AS trim_text
-        |  FROM trk
-        |  WHERE len(kept) > 0),
-        |tk3 AS (
-        |  SELECT doc_id,
-        |         string_split_regex(lower(trim_text), '\s+') AS toks
-        |  FROM trv),
-        |sha3 AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(toks) >= 5 THEN
-        |             list_distinct(list_transform(range(len(toks) - 4),
-        |               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
-        |                    || ' ' || toks[i+4] || ' ' || toks[i+5]))
-        |           ELSE [array_to_string(toks, ' ')] END AS sharr
-        |  FROM tk3),
-        |sh3 AS (SELECT doc_id, unnest(sharr) AS s FROM sha3),
-        |dfq3 AS (SELECT s FROM sh3 GROUP BY s HAVING count(*) BETWEEN 2 AND 5),
-        |r3 AS (SELECT sh3.doc_id, sh3.s FROM sh3 JOIN dfq3 USING (s)),
-        |cand3 AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM r3 a JOIN r3 b USING (s) WHERE a.doc_id < b.doc_id
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e3 AS (
-        |  SELECT c.id1, c.id2
-        |  FROM cand3 c
-        |  JOIN sha3 x ON x.doc_id = c.id1
-        |  JOIN sha3 y ON y.doc_id = c.id2
-        |  WHERE CAST(len(list_intersect(x.sharr, y.sharr)) AS DOUBLE)
-        |        / nullif(len(list_distinct(list_concat(x.sharr, y.sharr))), 0)
-        |        >= 0.5),
-        |sym3 AS (SELECT id1 AS src, id2 AS dst FROM e3
-        |         UNION ALL SELECT id2, id1 FROM e3),
-        |reach3(id, root) AS (
-        |  SELECT doc_id, doc_id FROM trv
-        |  UNION
-        |  SELECT sym3.dst, reach3.root
-        |  FROM reach3 JOIN sym3 ON sym3.src = reach3.id),
-        |lab3 AS (SELECT id AS doc_id, min(root) AS cluster_id
-        |         FROM reach3 GROUP BY 1),
-        |sz3 AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-        |        FROM lab3 GROUP BY 1),
+        |${trimSql},
+        |${clusterSql("trv", "trim_text")},
         |canon AS (
         |  SELECT trv.doc_id, trv.n_trim_removed, trv.trim_text,
         |         sv.n_spans, sv.n_removed, sv.source, sz3.cluster_size
         |  FROM trv JOIN sv USING (doc_id)
         |  JOIN lab3 USING (doc_id) JOIN sz3 USING (cluster_id)
         |  WHERE trv.doc_id = lab3.cluster_id),
-        |tok3 AS (
-        |  SELECT doc_id, source IN ('src0','src1') AS tgt,
-        |         unnest(string_split_regex(lower(trim_text), '\s+')) AS w
-        |  FROM canon),
-        |lm3 AS (
-        |  SELECT w, count(*) AS cr,
-        |         sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct
-        |  FROM tok3 GROUP BY 1),
-        |tot3 AS (SELECT sum(cr) AS nr, sum(ct) AS nt, count(*) AS v FROM lm3),
-        |pd3 AS (SELECT doc_id, w, count(*) AS c FROM tok3 GROUP BY 1, 2),
-        |iw3 AS (
-        |  SELECT pd3.doc_id,
-        |         round(sum(pd3.c * (ln((lm3.ct + 1.0) / (tot3.nt + 1.0 * tot3.v))
-        |                   - ln((lm3.cr + 1.0) / (tot3.nr + 1.0 * tot3.v))))
-        |               / sum(pd3.c), 6) + 0.0 AS avg_log_weight
-        |  FROM pd3 JOIN lm3 USING (w) CROSS JOIN tot3
-        |  GROUP BY 1),
-        |thr3 AS (SELECT quantile_cont(avg_log_weight, 0.5) AS thr FROM iw3),
+        |${dsirSql("trim_text")},
         |fin AS (
         |  SELECT c.doc_id, c.n_spans, c.n_removed, c.n_trim_removed,
         |         c.trim_text, c.cluster_size, i.avg_log_weight,
@@ -6516,7 +6210,7 @@ object SparkEntry {
         |FROM sh23 ORDER BY 2, 3""".stripMargin,
 
     "corpus_pipeline_v5" ->
-      """WITH RECURSIVE inj AS (
+      raw"""WITH RECURSIVE inj AS (
         |  SELECT doc_id, source, n_chars,
         |         text
         |         || (CASE WHEN doc_id % 7 = 0
@@ -6545,7 +6239,7 @@ object SparkEntry {
         |  SELECT doc_id, n_chars, url,
         |    array_to_string(list_sort(list_filter(
         |      string_split(regexp_extract(regexp_replace(trim(url),
-        |        '#.*$', ''), '\?(.*)$', 1), '&'),
+        |        '#.*$$', ''), '\?(.*)$$', 1), '&'),
         |      p -> p <> '' AND NOT regexp_matches(p,
         |        '^(utm_[a-zA-Z0-9_]*|gclid|fbclid|ref|mc_cid|mc_eid)='))),
         |      '&') AS qq
@@ -6554,12 +6248,12 @@ object SparkEntry {
         |  SELECT doc_id, n_chars,
         |    regexp_replace(regexp_replace(
         |      lower(regexp_extract(regexp_replace(regexp_replace(trim(url),
-        |        '#.*$', ''), '\?.*$', ''),
+        |        '#.*$$', ''), '\?.*$$', ''),
         |        '^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*)', 1)),
-        |      '^(http://[^/:]+):80$', '\1'), '^(https://[^/:]+):443$', '\1')
+        |      '^(http://[^/:]+):80$$', '\1'), '^(https://[^/:]+):443$$', '\1')
         |    || regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |         trim(url), '#.*$', ''), '\?.*$', ''),
-        |         '^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*', ''), '/+$', '')
+        |         trim(url), '#.*$$', ''), '\?.*$$', ''),
+        |         '^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*', ''), '/+$$', '')
         |    || (CASE WHEN qq <> '' THEN '?' || qq ELSE '' END)
         |      AS canonical_url
         |  FROM q5),
@@ -6569,40 +6263,7 @@ object SparkEntry {
         |           ORDER BY n_chars DESC, doc_id) AS rn
         |    FROM c5)
         |  WHERE rn = 1),
-        |norm AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(
-        |               regexp_replace(
-        |                 regexp_replace(
-        |                   regexp_replace(text, '<[^>]*>', ' ', 'g'),
-        |                 '&lt;', '<', 'g'),
-        |               '&gt;', '>', 'g'),
-        |             '&amp;', '&', 'g'),
-        |           '[\x00-\x1f]', ' ', 'g'),
-        |         '\s+', ' ', 'g')) AS text
-        |  FROM inj JOIN surv USING (doc_id)),
-        |bench AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 = 0),
-        |corp AS (SELECT doc_id, text FROM norm WHERE doc_id % 10 <> 0),
-        |gt AS (
-        |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> x <> '') AS toks
-        |  FROM corp),
-        |gate AS (
-        |  SELECT doc_id, text FROM gt
-        |  WHERE len(toks) BETWEEN 50 AND 100000
-        |    AND coalesce(CAST(list_sum(list_transform(toks,
-        |          x -> length(x))) AS DOUBLE) / nullif(len(toks), 0)
-        |        BETWEEN 3.0 AND 10.0, false)
-        |    AND coalesce(CAST(length(text)
-        |          - length(replace(text, '#', ''))
-        |          + (length(text) - length(replace(text, '...', ''))) // 3
-        |          AS DOUBLE) / nullif(len(toks), 0) <= 0.1, false)
-        |    AND coalesce(CAST(len(list_filter(toks,
-        |          x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-        |        / nullif(len(toks), 0) >= 0.8, false)),
+        |${gateSql("inj JOIN surv USING (doc_id)")},
         |ln5 AS (
         |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS pos,
         |         unnest(pieces) AS line
@@ -6613,7 +6274,7 @@ object SparkEntry {
         |         CAST(length(line) AS BIGINT) AS chars,
         |         CASE WHEN regexp_matches(trim(line), '^[-*•]')
         |              THEN 1 ELSE 0 END AS fb,
-        |         CASE WHEN regexp_matches(trim(line), '(\.\.\.|…)$')
+        |         CASE WHEN regexp_matches(trim(line), '(\.\.\.|…)$$')
         |              THEN 1 ELSE 0 END AS fe,
         |         CASE WHEN len(list_filter(
         |                string_split_regex(trim(line), '\s+'),
@@ -6624,7 +6285,7 @@ object SparkEntry {
         |                   / length(regexp_replace(line, '[^A-Za-z]', '', 'g'))
         |                   > 0.6
         |              THEN 1 ELSE 0 END AS fu,
-        |         CASE WHEN regexp_matches(trim(line), '^[0-9\s.,;:%()\-]+$')
+        |         CASE WHEN regexp_matches(trim(line), '^[0-9\s.,;:%()\-]+$$')
         |               AND regexp_matches(trim(line), '[0-9]')
         |              THEN 1 ELSE 0 END AS fn
         |  FROM ln5),
@@ -6643,125 +6304,15 @@ object SparkEntry {
         |             / nullif(sum(chars), 0), 0.0), 6) <= 0.5
         |     AND coalesce(string_agg(CASE WHEN flag = 0 THEN line END, '. '
         |                             ORDER BY pos), '') <> ''),
-        |bg AS (
-        |  SELECT DISTINCT unnest(
-        |           CASE WHEN len(w) >= 8 THEN
-        |             list_distinct(list_transform(range(len(w) - 7),
-        |               i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                    w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                    w[i+7] || ' ' || w[i+8]))
-        |           ELSE [array_to_string(w, ' ')] END) AS g
-        |  FROM (SELECT string_split_regex(lower(text), '\s+') AS w
-        |        FROM bench)),
-        |cg AS (
-        |  SELECT doc_id, len(sh) AS n, unnest(sh) AS g
-        |  FROM (SELECT doc_id,
-        |          CASE WHEN len(w) >= 8 THEN
-        |            list_distinct(list_transform(range(len(w) - 7),
-        |              i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |                   w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' ||
-        |                   w[i+7] || ' ' || w[i+8]))
-        |          ELSE [array_to_string(w, ' ')] END AS sh
-        |        FROM (SELECT doc_id, string_split_regex(lower(text), '\s+')
-        |                AS w FROM lq))),
-        |contaminated AS (
-        |  SELECT cg.doc_id FROM cg JOIN bg ON bg.g = cg.g
-        |  GROUP BY cg.doc_id, cg.n
-        |  HAVING round(count(*) * 1.0 / cg.n, 6) >= 0.3),
-        |clean AS (
-        |  SELECT doc_id, text FROM lq
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        |sp AS (
-        |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS pos,
-        |         unnest(pieces) AS span
-        |  FROM (SELECT doc_id, string_split_regex(text, '\. ') AS pieces
-        |        FROM clean)),
-        |flag AS (
-        |  SELECT doc_id, pos, span,
-        |         row_number() OVER (PARTITION BY lower(trim(span))
-        |                            ORDER BY doc_id, pos) AS rn
-        |  FROM sp),
-        |sd AS (
-        |  SELECT doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_spans,
-        |         CAST(sum(CASE WHEN rn = 1 THEN 0 ELSE 1 END) AS BIGINT)
-        |           AS n_removed,
-        |         coalesce(string_agg(CASE WHEN rn = 1 THEN span END, '. '
-        |                             ORDER BY pos), '') AS kept_text
-        |  FROM flag GROUP BY 1),
+        |${decontamSpanSql("lq")},
         |sv AS (
         |  SELECT sd.doc_id, sd.n_spans, sd.n_removed, sd.kept_text,
         |         d.source, l.n_line_flagged
         |  FROM sd JOIN documents d USING (doc_id)
         |  JOIN lq l USING (doc_id)
         |  WHERE sd.kept_text <> ''),
-        |trt AS (
-        |  SELECT doc_id, string_split_regex(kept_text, '\s+') AS w,
-        |         string_split_regex(lower(kept_text), '\s+') AS lw
-        |  FROM sv),
-        |trp AS (
-        |  SELECT doc_id, s['pos'] AS pos, s['gram'] AS gram FROM (
-        |    SELECT doc_id, unnest(list_transform(range(len(lw) - 9),
-        |      i -> {'pos': i + 1,
-        |            'gram': array_to_string(lw[i+1:i+10], ' ')})) AS s
-        |    FROM trt WHERE len(lw) >= 10)),
-        |trdup AS (SELECT gram FROM trp GROUP BY gram HAVING count(*) >= 2),
-        |trst AS (SELECT doc_id, list_sort(list(pos)) AS starts
-        |         FROM trp JOIN trdup USING (gram) GROUP BY doc_id),
-        |trj AS (SELECT trt.doc_id, w,
-        |          coalesce(trst.starts, CAST([] AS BIGINT[])) AS starts
-        |        FROM trt LEFT JOIN trst ON trt.doc_id = trst.doc_id),
-        |trk AS (SELECT doc_id, len(w) AS n_tokens,
-        |          list_filter(list_transform(range(len(w)),
-        |              q -> {'p': q + 1, 'tok': w[CAST(q + 1 AS INTEGER)]}),
-        |            s -> len(list_filter(starts,
-        |              z -> s['p'] >= z AND s['p'] < z + 10)) = 0) AS kept
-        |        FROM trj),
-        |trv AS (
-        |  SELECT doc_id,
-        |         CAST(n_tokens - len(kept) AS INTEGER) AS n_trim_removed,
-        |         array_to_string(list_transform(kept, s -> s['tok']), ' ')
-        |           AS trim_text
-        |  FROM trk
-        |  WHERE len(kept) > 0),
-        |tk3 AS (
-        |  SELECT doc_id,
-        |         string_split_regex(lower(trim_text), '\s+') AS toks
-        |  FROM trv),
-        |sha3 AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(toks) >= 5 THEN
-        |             list_distinct(list_transform(range(len(toks) - 4),
-        |               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
-        |                    || ' ' || toks[i+4] || ' ' || toks[i+5]))
-        |           ELSE [array_to_string(toks, ' ')] END AS sharr
-        |  FROM tk3),
-        |sh3 AS (SELECT doc_id, unnest(sharr) AS s FROM sha3),
-        |dfq3 AS (SELECT s FROM sh3 GROUP BY s HAVING count(*) BETWEEN 2 AND 5),
-        |r3 AS (SELECT sh3.doc_id, sh3.s FROM sh3 JOIN dfq3 USING (s)),
-        |cand3 AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM r3 a JOIN r3 b USING (s) WHERE a.doc_id < b.doc_id
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e3 AS (
-        |  SELECT c.id1, c.id2
-        |  FROM cand3 c
-        |  JOIN sha3 x ON x.doc_id = c.id1
-        |  JOIN sha3 y ON y.doc_id = c.id2
-        |  WHERE CAST(len(list_intersect(x.sharr, y.sharr)) AS DOUBLE)
-        |        / nullif(len(list_distinct(list_concat(x.sharr, y.sharr))), 0)
-        |        >= 0.5),
-        |sym3 AS (SELECT id1 AS src, id2 AS dst FROM e3
-        |         UNION ALL SELECT id2, id1 FROM e3),
-        |reach3(id, root) AS (
-        |  SELECT doc_id, doc_id FROM trv
-        |  UNION
-        |  SELECT sym3.dst, reach3.root
-        |  FROM reach3 JOIN sym3 ON sym3.src = reach3.id),
-        |lab3 AS (SELECT id AS doc_id, min(root) AS cluster_id
-        |         FROM reach3 GROUP BY 1),
-        |sz3 AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-        |        FROM lab3 GROUP BY 1),
+        |${trimSql},
+        |${clusterSql("trv", "trim_text")},
         |canon AS (
         |  SELECT trv.doc_id, trv.n_trim_removed, trv.trim_text,
         |         sv.n_spans, sv.n_removed, sv.n_line_flagged, sv.source,
@@ -6769,24 +6320,7 @@ object SparkEntry {
         |  FROM trv JOIN sv USING (doc_id)
         |  JOIN lab3 USING (doc_id) JOIN sz3 USING (cluster_id)
         |  WHERE trv.doc_id = lab3.cluster_id),
-        |tok3 AS (
-        |  SELECT doc_id, source IN ('src0','src1') AS tgt,
-        |         unnest(string_split_regex(lower(trim_text), '\s+')) AS w
-        |  FROM canon),
-        |lm3 AS (
-        |  SELECT w, count(*) AS cr,
-        |         sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct
-        |  FROM tok3 GROUP BY 1),
-        |tot3 AS (SELECT sum(cr) AS nr, sum(ct) AS nt, count(*) AS v FROM lm3),
-        |pd3 AS (SELECT doc_id, w, count(*) AS c FROM tok3 GROUP BY 1, 2),
-        |iw3 AS (
-        |  SELECT pd3.doc_id,
-        |         round(sum(pd3.c * (ln((lm3.ct + 1.0) / (tot3.nt + 1.0 * tot3.v))
-        |                   - ln((lm3.cr + 1.0) / (tot3.nr + 1.0 * tot3.v))))
-        |               / sum(pd3.c), 6) + 0.0 AS avg_log_weight
-        |  FROM pd3 JOIN lm3 USING (w) CROSS JOIN tot3
-        |  GROUP BY 1),
-        |thr3 AS (SELECT quantile_cont(avg_log_weight, 0.5) AS thr FROM iw3),
+        |${dsirSql("trim_text")},
         |fin AS (
         |  SELECT c.doc_id, c.n_spans, c.n_removed, c.n_line_flagged,
         |         c.n_trim_removed,
@@ -6810,24 +6344,14 @@ object SparkEntry {
         |FROM sh23 ORDER BY 2, 3""".stripMargin,
 
     "text_normalize" ->
-      """WITH m AS (
+      raw"""WITH m AS (
         |  SELECT doc_id,
         |         '<div class="doc">' || text || '</div> &amp; <br/>' ||
         |         chr(1) || ' tail &lt;EOS&gt;' AS raw
         |  FROM documents),
         |n AS (
         |  SELECT doc_id, raw,
-        |         trim(regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(
-        |               regexp_replace(
-        |                 regexp_replace(
-        |                   regexp_replace(raw, '<[^>]*>', ' ', 'g'),
-        |                 '&lt;', '<', 'g'),
-        |               '&gt;', '>', 'g'),
-        |             '&amp;', '&', 'g'),
-        |           '[\x00-\x1f]', ' ', 'g'),
-        |         '\s+', ' ', 'g')) AS norm_text
+        |         ${normSql("raw")} AS norm_text
         |  FROM m)
         |SELECT doc_id, norm_text,
         |       CAST(length(raw) AS BIGINT) AS n_chars_raw,
@@ -6835,7 +6359,7 @@ object SparkEntry {
         |FROM n ORDER BY 1""".stripMargin,
 
     "html_extract" ->
-      """WITH page AS (
+      raw"""WITH page AS (
         |  SELECT doc_id,
         |         '<html><head><title>Doc ' || doc_id || '</title>'
         |         || '<style>p{color:red}</style><script>var x=1;</script></head><body>'
@@ -6848,33 +6372,7 @@ object SparkEntry {
         |         || '<footer>copyright 2024 ' || source || ' media group</footer>'
         |         || '</body></html>' AS html
         |  FROM documents),
-        |ns AS (
-        |  SELECT doc_id,
-        |         regexp_replace(regexp_replace(html,
-        |           '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |           '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS h
-        |  FROM page),
-        |bl AS (
-        |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS block_idx,
-        |         unnest(pieces) AS raw
-        |  FROM (SELECT doc_id, string_split(regexp_replace(h,
-        |          '(?i)</?(?:header|head|footer|title|html|body|table|tr|td|section|article|nav|div|p|h[1-6]|li|ul|ol|br)\b[^>]*>',
-        |          chr(1), 'g'), chr(1)) AS pieces
-        |        FROM ns)),
-        |nb AS (
-        |  SELECT doc_id, block_idx, raw,
-        |         trim(regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(
-        |               regexp_replace(
-        |                 regexp_replace(
-        |                   regexp_replace(raw, '<[^>]*>', ' ', 'g'),
-        |                 '&lt;', '<', 'g'),
-        |               '&gt;', '>', 'g'),
-        |             '&amp;', '&', 'g'),
-        |           '[\x00-\x1f]', ' ', 'g'),
-        |         '\s+', ' ', 'g')) AS block_text
-        |  FROM bl),
+        |${jusTextBlocksSql},
         |sc AS (
         |  SELECT doc_id, block_idx, block_text,
         |         length(block_text) AS n_chars,
@@ -6887,27 +6385,7 @@ object SparkEntry {
         |             x -> length(trim(regexp_replace(x, '<[^>]*>', ' ', 'g'))))), 0) AS DOUBLE)
         |           / length(block_text), 1.0), 6) AS link_density
         |  FROM nb WHERE block_text <> ''),
-        |cf AS (
-        |  SELECT *, CASE WHEN link_density > 0.25 THEN 'bad'
-        |                 WHEN n_chars < 40 THEN 'short'
-        |                 WHEN stop_frac >= 0.12 AND n_chars >= 120 THEN 'good'
-        |                 WHEN stop_frac >= 0.06 THEN 'neargood'
-        |                 ELSE 'bad' END AS cls_free
-        |  FROM sc),
-        |cx AS (
-        |  SELECT *,
-        |         last_value(CASE WHEN cls_free IN ('good','bad') THEN cls_free END IGNORE NULLS)
-        |           OVER (PARTITION BY doc_id ORDER BY block_idx
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_def,
-        |         first_value(CASE WHEN cls_free IN ('good','bad') THEN cls_free END IGNORE NULLS)
-        |           OVER (PARTITION BY doc_id ORDER BY block_idx
-        |                 ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_def
-        |  FROM cf),
-        |fin AS (
-        |  SELECT *, CASE WHEN cls_free IN ('good','bad') THEN cls_free
-        |                 WHEN prev_def = 'good' OR next_def = 'good' THEN 'good'
-        |                 ELSE 'bad' END AS cls_final
-        |  FROM cx)
+        |${jusTextClassSql}
         |SELECT doc_id,
         |       CAST(count(*) AS BIGINT) AS n_blocks,
         |       CAST(count(CASE WHEN cls_free = 'good' THEN 1 END) AS BIGINT) AS n_free_good,
@@ -6921,7 +6399,7 @@ object SparkEntry {
         |FROM fin GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "ccnet_pipeline" ->
-      """WITH page AS (
+      raw"""WITH page AS (
         |  SELECT doc_id,
         |         '<html><head><title>Doc ' || doc_id || '</title>'
         |         || '<style>p{color:red}</style><script>var x=1;</script></head><body>'
@@ -6935,33 +6413,7 @@ object SparkEntry {
         |         || '<footer>copyright 2024 ' || source || ' media group</footer>'
         |         || '</body></html>' AS html
         |  FROM documents),
-        |ns AS (
-        |  SELECT doc_id,
-        |         regexp_replace(regexp_replace(html,
-        |           '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |           '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS h
-        |  FROM page),
-        |bl AS (
-        |  SELECT doc_id, generate_subscripts(pieces, 1) - 1 AS block_idx,
-        |         unnest(pieces) AS raw
-        |  FROM (SELECT doc_id, string_split(regexp_replace(h,
-        |          '(?i)</?(?:header|head|footer|title|html|body|table|tr|td|section|article|nav|div|p|h[1-6]|li|ul|ol|br)\b[^>]*>',
-        |          chr(1), 'g'), chr(1)) AS pieces
-        |        FROM ns)),
-        |nb AS (
-        |  SELECT doc_id, block_idx, raw,
-        |         trim(regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(
-        |               regexp_replace(
-        |                 regexp_replace(
-        |                   regexp_replace(raw, '<[^>]*>', ' ', 'g'),
-        |                 '&lt;', '<', 'g'),
-        |               '&gt;', '>', 'g'),
-        |             '&amp;', '&', 'g'),
-        |           '[\x00-\x1f]', ' ', 'g'),
-        |         '\s+', ' ', 'g')) AS block_text
-        |  FROM bl),
+        |${jusTextBlocksSql},
         |sc AS (
         |  SELECT doc_id, block_idx, block_text,
         |         length(block_text) AS n_chars,
@@ -6973,27 +6425,7 @@ object SparkEntry {
         |             x -> length(trim(regexp_replace(x, '<[^>]*>', ' ', 'g'))))), 0) AS DOUBLE)
         |           / length(block_text), 1.0), 6) AS link_density
         |  FROM nb WHERE block_text <> ''),
-        |cf AS (
-        |  SELECT *, CASE WHEN link_density > 0.25 THEN 'bad'
-        |                 WHEN n_chars < 40 THEN 'short'
-        |                 WHEN stop_frac >= 0.12 AND n_chars >= 120 THEN 'good'
-        |                 WHEN stop_frac >= 0.06 THEN 'neargood'
-        |                 ELSE 'bad' END AS cls_free
-        |  FROM sc),
-        |cx AS (
-        |  SELECT *,
-        |         last_value(CASE WHEN cls_free IN ('good','bad') THEN cls_free END IGNORE NULLS)
-        |           OVER (PARTITION BY doc_id ORDER BY block_idx
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_def,
-        |         first_value(CASE WHEN cls_free IN ('good','bad') THEN cls_free END IGNORE NULLS)
-        |           OVER (PARTITION BY doc_id ORDER BY block_idx
-        |                 ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_def
-        |  FROM cf),
-        |fin AS (
-        |  SELECT *, CASE WHEN cls_free IN ('good','bad') THEN cls_free
-        |                 WHEN prev_def = 'good' OR next_def = 'good' THEN 'good'
-        |                 ELSE 'bad' END AS cls_final
-        |  FROM cx),
+        |${jusTextClassSql},
         |ex AS (
         |  SELECT f.doc_id,
         |         string_agg(CASE WHEN cls_final = 'good' THEN block_text END,

@@ -3,18 +3,145 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Corpus curation reporting — the "data card" aggregation a curation run
-  * publishes alongside a training set: per source, how much text there is,
-  * how duplicated it is, and what fraction survives the quality gates.
-  * The numbers a mixture designer feeds back into
-  * [[Sampling.mixture]]'s weights.
+/** Corpus curation: the stage boundary, the shared stages of the curation
+  * capstone chain, and the reporting aggregations a curation run publishes
+  * alongside a training set.
+  *
+  * The capstone chain (`corpus_pipeline_v2`–`v5`) is normalize → held-out
+  * split → Gopher gate → 8-gram decontamination → pin → span dedup → pin →
+  * [repeated-gram trim → pin] → near-dup canon → DSIR median cut → shard
+  * shuffle. Each stage below is written once; a capstone is its source, its
+  * own extra stages and its final projection around calls to them. The
+  * values every capstone shares are fixed here, not parameters.
   */
 object Curation {
 
-  /** Per-source data card: doc/char/token volumes, exact-duplicate rate
-    * (fraction of docs that are NOT the first occurrence of their
-    * canonical fingerprint, corpus-wide — so cross-source copies count
-    * against the copying source), and the Gopher-rule pass rate.
+  /** Capstone stage-boundary materialization, parameterized by the
+    * session conf `graft.stage.boundary` so one code path serves both the
+    * bench box and a real cluster:
+    *
+    *  - `local` (default): eager `localCheckpoint` — fastest, but blocks
+    *    are UNREPLICATED executor-local storage, so on a multi-executor
+    *    cluster one executor loss mid-capstone fails the job and the
+    *    truncated lineage cannot recompute. The right trade at local[32]
+    *    and for minutes-long runs.
+    *  - `reliable`: eager reliable `checkpoint` into
+    *    `spark.sparkContext`'s checkpoint directory (must be set) — the
+    *    cluster-durable stage write every published pipeline performs
+    *    between its per-doc prefix and cross-doc suffix; survives
+    *    executor loss, tasks retry from the checkpoint files
+    *    (FaultToleranceSpec injects first-attempt task failures through
+    *    a reliable-boundary capstone and pins identical output).
+    *  - `none`: passthrough — plan-shape A/Bs and debugging.
+    *
+    * At 100 TB the `reliable` files land on the cluster's checkpoint
+    * store (HDFS/object store) exactly like the lake-materialized stage
+    * dirs the streaming loops write — same durability class, chosen by
+    * conf instead of a code fork. */
+  private[graft] def stageBoundary(df: DataFrame): DataFrame =
+    df.sparkSession.conf.get("graft.stage.boundary", "local") match {
+      case "local" => df.localCheckpoint(true)
+      case "reliable" =>
+        require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+          "graft.stage.boundary=reliable requires " +
+            "spark.sparkContext.setCheckpointDir(...)")
+        df.checkpoint(eager = true)
+      case "none" => df
+      case other => throw new IllegalArgumentException(
+        s"graft.stage.boundary must be local|reliable|none, got '$other'")
+    }
+
+  /** Chained-call form of [[stageBoundary]]. */
+  private[graft] implicit class StageBoundaryOps(df: DataFrame) {
+    def stagePin(): DataFrame = stageBoundary(df)
+  }
+
+  /** Normalize → held-out split (every 10th doc is the benchmark) → Gopher
+    * gate. `docs` needs `doc_id` and `text`; returns the benchmark
+    * (doc_id, text) and the gated corpus with all of `docs`' columns. */
+  private[graft] def heldOutGopher(docs: DataFrame): (DataFrame, DataFrame) = {
+    val norm = docs.withColumn("text", TextAnalysis.normalize(col("text")))
+    val benchmark = norm.where(col("doc_id") % 10 === 0)
+      .select("doc_id", "text")
+    val gated = TextAnalysis.gopherRules(norm.where(col("doc_id") % 10 =!= 0))
+      .where(col("pass_gopher") === 1).select(docs.columns.map(col): _*)
+    (benchmark, gated)
+  }
+
+  /** 8-gram decontamination against the held-out benchmark (drop a doc
+    * when ≥ 0.3 of its 8-grams occur there), then the first stage
+    * boundary. The decontaminated prefix is consumed twice by the span
+    * stage (spanDedup's span census + rebuild join, and the carried-column
+    * re-join), so without the pin the regex-heavy normalize/Gopher/8-gram
+    * prefix re-evaluates per reference inside one action (measured
+    * 3.4 → 0.5 + 1.9 s warm at sf0.1 for the prefix + span stages). */
+  private[graft] def decontaminate(benchmark: DataFrame,
+                                   docs: DataFrame): DataFrame = {
+    val contaminated =
+      Dedup.contaminationNgram(benchmark, docs.select("doc_id", "text"), n = 8)
+        .where(col("share_frac") >= 0.3)
+        .select(col("test_id").as("doc_id"))
+    docs.join(contaminated, Seq("doc_id"), "left_anti").stagePin()
+  }
+
+  /** Span-grain exact dedup that drops wiped docs and carries the input's
+    * other columns, then the second stage boundary: everything above is a
+    * linear per-doc pipeline, everything below consumes it repeatedly (the
+    * clustering loop iterates, and the canon fans out to selection and the
+    * final join). These are the stage writes between the per-doc prefix
+    * and the cross-doc suffix every published pipeline performs anyway;
+    * without them the prefix re-evaluates per consumer (measured 2.0× on
+    * the bench median, 18.7 → 9.3 s at sf0.1). Emits (doc_id, n_spans,
+    * n_removed, kept_text, carried columns). */
+  private[graft] def spanDedupStage(clean: DataFrame): DataFrame =
+    Dedup.spanDedup(clean.select("doc_id", "text"))
+      .where(col("kept_text") =!= "")
+      .join(clean.drop("text"), "doc_id")
+      .stagePin()
+
+  /** Corpus-wide repeated-10-gram trim (minCount 2) of the span stage's
+    * `kept_text`, the ExactSubstr scrub the published pipelines run between
+    * exact and fuzzy dedup; fully-boilerplate docs (trimmed to nothing)
+    * drop. Carries the span columns and pins: the trim output fans out to
+    * the clustering loop, the selection LM and the final join. Emits
+    * (doc_id, n_trim_removed, trim_text, the span columns except kept_text). */
+  private[graft] def trimStage(span: DataFrame): DataFrame =
+    Dedup.repeatedNgramTrim(
+        span.select(col("doc_id"), col("kept_text").as("text")),
+        n = 10, minCount = 2)
+      .select(col("doc_id"), col("n_removed_tokens").as("n_trim_removed"),
+        col("kept_text").as("trim_text"))
+      .where(col("trim_text") =!= "")
+      .join(span.drop("kept_text"), "doc_id")
+      .stagePin()
+
+  /** Near-dup canon (keep each cluster's canonical doc) → DSIR
+    * importance-weight median cut, the LM trained on the survivors with
+    * sources src0/src1 as the target → deterministic shuffle into 4
+    * shards under `seed`. `stage` needs doc_id, `textCol` and source;
+    * adds cluster_size, avg_log_weight, shard and pos_in_shard. */
+  private[graft] def canonDsirShuffle(stage: DataFrame, textCol: String,
+                                      seed: String): DataFrame = {
+    val clusters = Cluster.nearDupClusters(
+        stage.select(col("doc_id"), col(textCol).as("text")))
+      .where(col("is_canonical") === 1)
+      .select(col("doc_id"), col("cluster_size"))
+    val canon = stage.join(clusters, "doc_id")
+    val selected = Selection.importanceSample(
+        canon.select(col("doc_id"), col(textCol).as("text"), col("source")),
+        isTarget = col("source").isin("src0", "src1"), quantile = 0.5)
+      .where(col("kept") === 1)
+      .select(col("doc_id"), col("avg_log_weight"))
+    Sampling.shardShuffle(canon.join(selected, "doc_id"), "doc_id",
+      nShards = 4, seed = seed)
+  }
+
+  /** Per-source data card — the numbers a mixture designer feeds back
+    * into [[Sampling.mixture]]'s weights: doc/char/token volumes,
+    * exact-duplicate rate (fraction of docs that are NOT the first
+    * occurrence of their canonical fingerprint, corpus-wide — so
+    * cross-source copies count against the copying source), and the
+    * Gopher-rule pass rate.
     *
     * One declarative plan: the per-doc metrics and rule flags are
     * map-side projections ([[TextAnalysis.gopherRules]]), duplicate

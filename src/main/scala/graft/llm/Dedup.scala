@@ -505,20 +505,19 @@ object Dedup {
                                   k: Int = 3, w: Int = 4,
                                   maxDf: Int = 10, minShared: Int = 2,
                                   idCol: String = "doc_id",
-                                  textCol: String = "text",
-                                  pinBatchFp: Boolean = false): DataFrame = {
+                                  textCol: String = "text"): DataFrame = {
     require(maxDf >= 2, s"winnowCandidatesIncremental: maxDf >= 2, got $maxDf")
     require(minShared >= 1, s"winnowCandidatesIncremental: minShared >= 1")
-    val batchFp0 = TextAnalysis.winnowFingerprints(newDocs, k, w, idCol, textCol)
-      .select(col(idCol), col("gram_hash")).distinct()
-      .repartition(col("gram_hash"))
     // semantically neutral plan truncation: the batch winnow subtree is
     // referenced by every consumer branch below (semi-filter build, df
     // census, pair sides, batch sizes) — runtime exchange reuse dedupes
     // its execution, but the replicated subtree inflates every planning/
-    // AQE round (A/B'd via OptProbe winnow_inc_pin_ab)
-    val batchFp =
-      if (pinBatchFp) graft.SparkEntry.stageBoundary(batchFp0) else batchFp0
+    // AQE round (698 → 424 plan nodes, ~−0.6 s/key warm at sf0.1 in the
+    // paired A/B of OPTIMIZATION_r18.md item 10)
+    val batchFp = Curation.stageBoundary(
+      TextAnalysis.winnowFingerprints(newDocs, k, w, idCol, textCol)
+        .select(col(idCol), col("gram_hash")).distinct()
+        .repartition(col("gram_hash")))
     // history enters ONLY through the batch's hash set (build-probe semi
     // filter — the trim_incremental shape): O(matched) rows, never O(index)
     val idxMatched = fpIndex

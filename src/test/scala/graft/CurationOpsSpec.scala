@@ -211,14 +211,11 @@ class CurationOpsSpec extends SparkTestBase {
         maxDf = 10, minShared = 2)
       .where(col("doc_a").isin(batchIds.toSeq: _*) ||
         col("doc_b").isin(batchIds.toSeq: _*))
-    // both the plain shape and the shipped pinBatchFp plan-truncated one
-    for (pin <- Seq(false, true)) {
-      val incr = Dedup.winnowCandidatesIncremental(batch, fpIndex,
-        maxDf = 10, minShared = 2, pinBatchFp = pin)
-      assert(incr.exceptAll(full).isEmpty && full.exceptAll(incr).isEmpty,
-        s"pinBatchFp=$pin")
-      assert(incr.count() > 0, "seeded variants must produce candidates")
-    }
+    // the operator pins its batch fingerprint relation (plan truncation)
+    val incr = Dedup.winnowCandidatesIncremental(batch, fpIndex,
+      maxDf = 10, minShared = 2)
+    assert(incr.exceptAll(full).isEmpty && full.exceptAll(incr).isEmpty)
+    assert(incr.count() > 0, "seeded variants must produce candidates")
   }
 
   test("winnowCandidatesIncremental fails loud on a batch/index id collision") {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.Cluster
+import graft.llm.{Cluster, Curation}
 
 /** In-JVM task-failure budget for fault injection: the first `budget` task
   * attempts that ask throw; retries (attemptNumber > 0) never throw. A
@@ -133,7 +133,7 @@ class FaultToleranceSpec extends AnyFunSuite {
           .where(col("kept_text") =!= "")
           .select(col("doc_id"), col("kept_text").as("text"),
             col("n_removed"))
-        val stage = SparkEntry.stageBoundary(span)
+        val stage = Curation.stageBoundary(span)
         graft.llm.Dedup.repeatedNgramTrim(
             stage.select(col("doc_id"), col("text")), n = 5, minCount = 4)
           .select(col("doc_id"), col("n_removed_tokens"), col("kept_text"))

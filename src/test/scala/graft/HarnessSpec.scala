@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 /** Harness-level checks of the driver contract itself. */
 class HarnessSpec extends SparkTestBase {
 
@@ -53,6 +55,19 @@ class HarnessSpec extends SparkTestBase {
     // the recursive capstone CTE stays plain
     val v4 = SparkEntry.oracleSql("corpus_pipeline_v4")
     assert(v4.contains("reach3(id, root) AS (\n"), "recursive CTE was rewritten")
+  }
+
+  test("library packages never reach up to the SparkEntry driver glue") {
+    val libs = Seq("llm", "functions", "operators", "sources", "streaming", "ml")
+    val offenders = libs.flatMap { pkg =>
+      val dir = Paths.get("src/main/scala/graft", pkg)
+      assert(Files.isDirectory(dir), s"missing library package dir $dir")
+      val files = Files.walk(dir)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(f => Files.readString(f).contains("SparkEntry")).toList
+      finally files.close()
+    }
+    assert(offenders.isEmpty, s"library files referencing SparkEntry: $offenders")
   }
 
   test("flagship entry returns rows on the smoke dataset") {
