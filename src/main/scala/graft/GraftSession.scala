@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   *   recommend false for production, but size-based coalescing targets
   *   BYTES while this engine's hot operators are compute-dense per byte
   *   (regex/backtest scans, connected-components rounds, fingerprint
-  *   joins). Round-13's PerfLab A/B (count()-consumed) measured false
-  *   9-16% worse on the compute-dense keys; re-measured in round 14
+  *   joins). A paired one-JVM A/B recorded in BASELINE.md measured
+  *   false 9-16% worse on the compute-dense keys when count()-consumed
+  *   (round 13); re-measured in round 14
   *   under the honest full-plan shape (noop write — projections + final
   *   sort execute), the penalty is smaller and MIXED per key
   *   (backtest_trades +6.0%, dedup_clusters +5.6%, winnow_candidates
@@ -24,8 +25,8 @@ import org.apache.spark.sql.SparkSession
   *   case where size-based coalescing pays (post-shuffle partitions far
   *   above the 64 MB advisory), and under-parallelizing CPU-bound
   *   stages is the asymmetric risk on a 32-core box; a cluster deploy
-  *   at real bytes/partition should re-run graft.PerfLab and decide on
-  *   its own data
+  *   at real bytes/partition should repeat that paired A/B (noop-sink
+  *   writes, variants interleaved per rep) and decide on its own data
   * - nanosAsLong: the testdata's TIMESTAMP(NANOS) columns surface as LONG
   *   (see [[graft.sources.Tables]])
   * - UTC session timezone: bar bucketing must be timezone-stable

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (rightmost on ties), returning the distinct selected
   * (pos, hash, gram) triples in window order.
   *
-  * Why native rather than the HOF formulation (kept as
-  * [[graft.llm.TextAnalysis.winnowFingerprintsHof]] for the equivalence
+  * Why native rather than the HOF formulation (kept in test scope as
+  * `graft.llm.ParityTwins.winnowFingerprintsHof` for the equivalence
   * test): Catalyst's CollapseProject inlines the gram-array expression
   * into every `transform` lambda that references it, so the layered HOF
   * plan re-evaluates the FULL gram array once per gram index and once

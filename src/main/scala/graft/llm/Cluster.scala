@@ -134,19 +134,18 @@ object Cluster {
     * iteration (2^k nodes by round k — an OOM on the DRIVER long before
     * executors see load). Pinning each round's result as a new leaf keeps
     * plan size O(1) per round — mandatory for iterative DataFrame
-    * algorithms. `reliable = false` (default) uses `localCheckpoint`:
-    * fastest, but blocks are non-replicated executor-local, so an executor
-    * loss mid-propagation fails the job and it must be retried from the
-    * start — acceptable for minutes-long runs. Set `reliable = true` (with
-    * `spark.sparkContext.setCheckpointDir(...)`) to write rounds to
-    * checkpoint-dir storage and survive executor loss — the right trade on
-    * a long 1000-executor run. Superseded rounds are released eagerly
-    * either way (blocks unpersisted / files left to the checkpoint dir's
-    * lifecycle). */
+    * algorithms. The checkpoint kind follows `graft.stage.boundary`
+    * ([[Curation.reliableStages]]): under `local` (default) rounds are
+    * `localCheckpoint`s — fastest, but blocks are non-replicated
+    * executor-local, so an executor loss mid-propagation fails the job and
+    * it must be retried from the start — acceptable for minutes-long runs.
+    * Under `reliable` rounds are written to checkpoint-dir storage and
+    * survive executor loss — the right trade on a long 1000-executor run.
+    * Superseded rounds are released eagerly either way (blocks unpersisted
+    * / files left to the checkpoint dir's lifecycle). */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-                          maxIter: Int = 20,
-                          reliable: Boolean = false): DataFrame = {
-    val labels = activeComponents(edges, maxIter, reliable)
+                          maxIter: Int = 20): DataFrame = {
+    val labels = activeComponents(edges, maxIter)
     // inert vertices (no incident edge) are their own singleton component;
     // left_anti on the converged active set restores the full vertex set
     labels.unionByName(
@@ -162,12 +161,9 @@ object Cluster {
     * handle the inert singletons themselves (see [[nearDupClusters]] —
     * keeping the singleton union OUT of the iterated/reused frame avoids
     * re-running the anti-join once per downstream consumer). */
-  def activeComponents(edges: DataFrame, maxIter: Int = 20,
-                       reliable: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
-    if (reliable) require(spark.sparkContext.getCheckpointDir.isDefined,
-      "reliable=true requires spark.sparkContext.setCheckpointDir(...)")
-    // Fast mode pins LAZILY: the per-round changed-row count is the only
+  def activeComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val reliable = Curation.reliableStages(edges.sparkSession)
+    // Local mode pins LAZILY: the per-round changed-row count is the only
     // action, and it both materializes the round's checkpoint blocks and
     // returns the convergence signal — ONE job per round instead of the
     // eager-pin-then-count pair (per-round job overhead, not data volume,

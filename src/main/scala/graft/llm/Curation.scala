@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus curation: the stage boundary, the shared stages of the curation
@@ -16,40 +16,46 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Capstone stage-boundary materialization, parameterized by the
-    * session conf `graft.stage.boundary` so one code path serves both the
-    * bench box and a real cluster:
+  /** The one durability switch for checkpointed stages: the session conf
+    * `graft.stage.boundary` selects local (`false`) or reliable (`true`)
+    * checkpoints for the capstone stage boundaries below and for the
+    * rounds of [[Cluster.activeComponents]], so one code path serves both
+    * the bench box and a real cluster:
     *
-    *  - `local` (default): eager `localCheckpoint` — fastest, but blocks
-    *    are UNREPLICATED executor-local storage, so on a multi-executor
+    *  - `local` (default): `localCheckpoint` — fastest, but blocks are
+    *    UNREPLICATED executor-local storage, so on a multi-executor
     *    cluster one executor loss mid-capstone fails the job and the
     *    truncated lineage cannot recompute. The right trade at local[32]
     *    and for minutes-long runs.
-    *  - `reliable`: eager reliable `checkpoint` into
-    *    `spark.sparkContext`'s checkpoint directory (must be set) — the
-    *    cluster-durable stage write every published pipeline performs
-    *    between its per-doc prefix and cross-doc suffix; survives
-    *    executor loss, tasks retry from the checkpoint files
-    *    (FaultToleranceSpec injects first-attempt task failures through
-    *    a reliable-boundary capstone and pins identical output).
-    *  - `none`: passthrough — plan-shape A/Bs and debugging.
+    *  - `reliable`: reliable `checkpoint` into `spark.sparkContext`'s
+    *    checkpoint directory (must be set) — the cluster-durable stage
+    *    write every published pipeline performs between its per-doc
+    *    prefix and cross-doc suffix; survives executor loss, tasks retry
+    *    from the checkpoint files (FaultToleranceSpec injects
+    *    first-attempt task failures through a reliable-boundary capstone
+    *    and through the components loop and pins identical output).
     *
     * At 100 TB the `reliable` files land on the cluster's checkpoint
     * store (HDFS/object store) exactly like the lake-materialized stage
     * dirs the streaming loops write — same durability class, chosen by
-    * conf instead of a code fork. */
-  private[graft] def stageBoundary(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("graft.stage.boundary", "local") match {
-      case "local" => df.localCheckpoint(true)
+    * conf instead of a code fork. Any other value throws. */
+  private[graft] def reliableStages(spark: SparkSession): Boolean =
+    spark.conf.get("graft.stage.boundary", "local") match {
+      case "local" => false
       case "reliable" =>
-        require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+        require(spark.sparkContext.getCheckpointDir.isDefined,
           "graft.stage.boundary=reliable requires " +
             "spark.sparkContext.setCheckpointDir(...)")
-        df.checkpoint(eager = true)
-      case "none" => df
+        true
       case other => throw new IllegalArgumentException(
-        s"graft.stage.boundary must be local|reliable|none, got '$other'")
+        s"graft.stage.boundary must be local|reliable, got '$other'")
     }
+
+  /** Capstone stage-boundary materialization: an eager checkpoint of the
+    * kind [[reliableStages]] selects. */
+  private[graft] def stageBoundary(df: DataFrame): DataFrame =
+    if (reliableStages(df.sparkSession)) df.checkpoint(eager = true)
+    else df.localCheckpoint(true)
 
   /** Chained-call form of [[stageBoundary]]. */
   private[graft] implicit class StageBoundaryOps(df: DataFrame) {

@@ -199,12 +199,6 @@ object Dedup {
         col("_best.q").as("keep_quality"))
   }
 
-  /** Pre-round-15 name of [[urlKeepBestFullRange]], kept for the
-    * DedupSpec equivalence pins. */
-  private[graft] def urlKeepBestStructRef(docs: DataFrame, url: Column,
-      quality: Column, idCol: String = "doc_id"): DataFrame =
-    urlKeepBestFullRange(docs, url, quality, idCol)
-
   /** Incremental URL-grain keep-best dedup — the growing-crawl production
     * shape of [[urlKeepBest]]: a new fetch batch elects its within-batch
     * best per canonical URL (ONE hash agg), then merges against the
@@ -408,12 +402,6 @@ object Dedup {
         bitwise_not(col("_best._notid")).as("keep_id"),
         col("_best.q").as("keep_quality"))
   }
-
-  /** Pre-round-15 name of [[exactKeepBestFullRange]], kept for the
-    * DedupSpec equivalence pins. */
-  private[graft] def exactKeepBestStructRef(docs: DataFrame, quality: Column,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    exactKeepBestFullRange(docs, quality, idCol, textCol)
 
   /** Near-dup candidate generation over WINNOWING fingerprints
     * ([[TextAnalysis.winnowFingerprints]]) — the MOSS index-join step:
@@ -1412,16 +1400,6 @@ object Dedup {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(
       graft.functions.WordShingles(GraftBridge.expression(text), n))
-  }
-
-  /** HOF reference formulation (kept for the equivalence test). */
-  def shinglesHof(text: Column, n: Int = 3): Column = {
-    val toks = TextAnalysis.tokens(lower(text))
-    array_distinct(
-      when(size(toks) >= n,
-        transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-        .otherwise(array(concat_ws(" ", toks))))
   }
 
   /** n-gram Jaccard similarity for an explicit pair frame with `textCol1`/

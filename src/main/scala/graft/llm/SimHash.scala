@@ -24,33 +24,6 @@ object SimHash {
       GraftBridge.column(graft.functions.SimHash64(GraftBridge.expression(toks))))
   }
 
-  /** Reference HOF formulation of the fingerprint (interpreted; kept for the
-    * bit-for-bit equivalence test against [[graft.functions.SimHash64]]).
-    * Variable shift amounts need SQL-expression lambdas (the Scala DSL's
-    * shiftright takes a literal only). */
-  def withFingerprintHof(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val withToks = docs.withColumn("_toks", TextAnalysis.tokens(lower(col(textCol))))
-    val bitSums = expr(
-      """aggregate(
-        |  _toks,
-        |  array_repeat(0, 64),
-        |  (acc, t) -> zip_with(
-        |    acc,
-        |    transform(sequence(0, 63),
-        |      i -> CASE WHEN (shiftright(xxhash64(t), i) & 1) = 1
-        |           THEN 1 ELSE -1 END),
-        |    (x, y) -> x + y))""".stripMargin)
-    val fp = expr(
-      """aggregate(
-        |  zip_with(_bitsums, sequence(0, 63), (s, i) -> IF(s > 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),
-        |  CAST(0 AS BIGINT),
-        |  (acc, v) -> acc | v)""".stripMargin)
-    withToks
-      .withColumn("_bitsums", bitSums)
-      .withColumn("simhash", fp)
-      .drop("_toks", "_bitsums")
-  }
-
   /** Four 16-bit band chunks of the fingerprint. */
   def bandChunk(fp: Column, band: Int): Column =
     shiftrightunsigned(fp, band * 16).bitwiseAND(lit(0xFFFFL))

@@ -57,7 +57,7 @@ object Similarity {
   }
 
   /** Deterministic random hyperplanes (seeded), as raw arrays. */
-  private def planesRaw(nPlanes: Int, dim: Int, seed: Int): Array[Array[Double]] = {
+  private[graft] def planesRaw(nPlanes: Int, dim: Int, seed: Int): Array[Array[Double]] = {
     val rnd = new Random(seed)
     Array.fill(nPlanes)(Array.fill(dim)(rnd.nextGaussian()))
   }
@@ -79,26 +79,6 @@ object Similarity {
     val v = col(vecCol).cast("array<double>")
     val bandStructs = GraftBridge.column(graft.functions.LshBandBuckets(
       GraftBridge.expression(v), planesRaw(nPlanes, dim, seed), bands))
-    df.withColumn("_b", explode(bandStructs))
-      .withColumn("band", col("_b.band"))
-      .withColumn("bucket", col("_b.bucket"))
-      .drop("_b")
-  }
-
-  /** The expression-tree twin of [[withLshBuckets]], kept for the
-    * native-vs-tree parity pin in LlmSpec (not on any query path). */
-  private[graft] def withLshBucketsTree(df: DataFrame, dim: Int, nPlanes: Int = 16,
-                                        bands: Int = 2, seed: Int = 7,
-                                        vecCol: String = "embedding"): DataFrame = {
-    require(nPlanes % bands == 0)
-    val perBand = nPlanes / bands
-    val ps = planesRaw(nPlanes, dim, seed).map(p => lit(p)).toIndexedSeq
-    val v = col(vecCol).cast("array<double>")
-    val signBits = ps.map(p => when(coalesce(cos(v, p), lit(0.0)) > 0.0, 1).otherwise(0))
-    val bandStructs = array((0 until bands).map { b =>
-      val chunk = signBits.slice(b * perBand, (b + 1) * perBand)
-      struct(lit(b).as("band"), xxhash64((lit(b) +: chunk): _*).as("bucket"))
-    }: _*)
     df.withColumn("_b", explode(bandStructs))
       .withColumn("band", col("_b.band"))
       .withColumn("bucket", col("_b.bucket"))
@@ -197,16 +177,6 @@ object Similarity {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(
       graft.functions.NearestCells(GraftBridge.expression(v), centers, n))
-  }
-
-  /** The expression-tree twin of [[nearestCells]], kept for the
-    * native-vs-tree parity pin in LlmSpec (not on any query path). */
-  private[graft] def nearestCellsTree(centers: Array[Array[Double]], v: Column,
-                                    n: Int): Column = {
-    val sims = array(centers.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-      struct(coalesce(cos(v, lit(c)), lit(-2.0)).as("sim"), lit(i).as("cell"))
-    }: _*)
-    slice(reverse(array_sort(sims)), 1, n).getField("cell")
   }
 
   /** IVF × SQ composed — the faiss IVF-SQ8 search shape, and the actual
@@ -551,8 +521,8 @@ object Similarity {
     *
     * Hot cells: cell sizes are data-dependent — a near-dup-heavy corpus
     * concentrates mass in one cell, and the O(c^2) pairs of that single
-    * join key land in ONE task. Measured (ScaleProbe hot-cell block, 50k
-    * vecs with a 25%-mass cell; BASELINE.md): plain 9.3 s; AQE skew-split
+    * join key land in ONE task. Measured (BASELINE.md's round-9 hot-cell
+    * table, 50k vecs with a 25%-mass cell): plain 9.3 s; AQE skew-split
     * 4.2 s — but ONLY with its byte threshold hand-tuned to ~the hot
     * partition's size (1 MB), because AQE keys on INPUT bytes while a
     * self-join's output is quadratic in key mass — at the 256 MB default a
@@ -833,8 +803,8 @@ object Similarity {
 
   /** The deterministic ±1 JL sign matrix (outDim×inDim), derived from the
     * seed alone: entry (j, i) = parity(md5(seed:j:i)) with 1-based i. */
-  private def jlMatrix(inDim: Int, outDim: Int,
-                       seed: String): Seq[Seq[Double]] = {
+  private[graft] def jlMatrix(inDim: Int, outDim: Int,
+                              seed: String): Seq[Seq[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     def sign(j: Int, i: Int): Double = {
       val h = md.digest(s"$seed:$j:$i".getBytes("UTF-8"))
@@ -842,18 +812,6 @@ object Similarity {
       if (((h(0) >> 4) & 1) == 1) 1.0 else -1.0
     }
     Seq.tabulate(outDim, inDim)((j, i) => sign(j, i + 1))
-  }
-
-  /** HOF reference formulation of [[projectVec]], pinned ≡ native in
-    * LlmSpec — off the query path. */
-  private[graft] def projectVecTree(vec: Column, inDim: Int, outDim: Int,
-                                    seed: String = "jl"): Column = {
-    val mLit = typedLit(jlMatrix(inDim, outDim, seed))
-    val v = vec.cast("array<double>")
-    val scale = math.sqrt(outDim.toDouble)
-    transform(sequence(lit(0), lit(outDim - 1)), j =>
-      aggregate(zip_with(v, element_at(mLit, j + 1), (x, w) => x * w),
-        lit(0.0), (acc, t) => acc + t) / scale)
   }
 
   /** Mean-pool member embeddings to group embeddings — the chunk→document
@@ -981,42 +939,17 @@ object Similarity {
     }
   }
 
-  /** Squared L2 distance between an array column and a literal centroid. */
-  private def sqDist(a: Column, c: Array[Double]): Column =
-    aggregate(zip_with(a, lit(c), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, t) => acc + t)
-
   /** PQ encode: per subspace, the argmin-distance code (ties to the
     * lowest code; a wrong-length vector encodes to null, surfacing
     * dimension drift). Returns `array<int>` of length m. Native
     * codegen'd [[graft.functions.PqCodes]] — 54× over the HOF reference
-    * formulation below (measured 47 K → 316 K vecs/s at 2.5 M 64-dim
-    * vectors on local[32]), which is kept only for the equivalence
-    * spec. */
+    * formulation (measured 47 K → 316 K vecs/s at 2.5 M 64-dim vectors on
+    * local[32]), which the equivalence spec keeps in test scope. */
   private[graft] def pqEncode(vec: Column, books: Array[Array[Array[Double]]],
                             inDim: Int): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.functions.PqCodes(
       GraftBridge.expression(vec.cast("array<double>")), books))
-  }
-
-  /** HOF reference formulation of [[pqEncode]] (per-centroid distance
-    * structs + array_sort argmin), pinned ≡ native in LlmSpec. */
-  private[graft] def pqEncodeHof(vec: Column,
-                               books: Array[Array[Array[Double]]],
-                               inDim: Int): Column = {
-    val m = books.length
-    val sub = inDim / m
-    val v = vec.cast("array<double>")
-    val codes = (0 until m).map { j =>
-      val sv = slice(v, j * sub + 1, sub)
-      val ds = array(books(j).zipWithIndex.toIndexedSeq.map { case (c, i) =>
-        struct(coalesce(sqDist(sv, c), lit(Double.MaxValue)).as("d"),
-          lit(i).as("code"))
-      }: _*)
-      element_at(array_sort(ds), 1).getField("code")
-    }
-    array(codes: _*)
   }
 
   /** PQ decode as a column: concatenate each subspace's selected centroid
@@ -1120,23 +1053,13 @@ object Similarity {
   /** Apply a d×d rotation to a vector column — map-side O(d²) per
     * vector, the [[projectVec]] matmul shape with a square learned
     * matrix instead of the random sign matrix. Native fused
-    * [[graft.functions.MatVec]] loop (the HOF reference formulation
-    * [[rotateVecTree]] is kept for the equivalence spec). */
+    * [[graft.functions.MatVec]] loop (the equivalence spec keeps the HOF
+    * reference formulation in test scope). */
   private[graft] def rotateVec(vec: Column, r: Seq[Seq[Double]]): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.functions.MatVec(
       GraftBridge.expression(vec.cast("array<double>")),
       r.map(_.toArray).toArray, None))
-  }
-
-  /** HOF reference formulation of [[rotateVec]], pinned ≡ native in
-    * LlmSpec — off the query path. */
-  private[graft] def rotateVecTree(vec: Column, r: Seq[Seq[Double]]): Column = {
-    val mLit = typedLit(r)
-    val v = vec.cast("array<double>")
-    transform(sequence(lit(0), lit(r.size - 1)), j =>
-      aggregate(zip_with(v, element_at(mLit, j + 1), (x, w) => x * w),
-        lit(0.0), (acc, t) => acc + t))
   }
 
   /** Driver-side nearest-centroid encode+reconstruct of one vector under

@@ -319,40 +319,6 @@ object TextAnalysis {
         col("_fp.gram_hash").as("gram_hash"), col("_fp.gram").as("gram"))
   }
 
-  /** HOF reference formulation of [[winnowFingerprints]], kept ONLY for
-    * the native/HOF equivalence test — do not use in pipelines: Catalyst's
-    * CollapseProject inlines the gram array into every transform lambda
-    * that references it, so this plan re-evaluates the full gram array per
-    * gram index and per window — O(n³) per document (76 s for the sf0.01
-    * dump where the native pass takes 0.4 s). */
-  def winnowFingerprintsHof(docs: DataFrame, k: Int = 3, w: Int = 4,
-                            idCol: String = "doc_id",
-                            textCol: String = "text"): DataFrame = {
-    require(k >= 1 && w >= 1, s"winnowFingerprints: k,w must be >= 1")
-    val grams = ngrams(col(textCol), k)
-    // encoded selection keys: hash(gram_i)·2^21 − i, one per gram
-    val keys = transform(sequence(lit(0), size(col("_g")) - 1),
-      i => conv(substring(md5(element_at(col("_g"), i + 1)), 1, 8), 16, 10)
-        .cast("long") * lit(2097152L) - i.cast("long"))
-    // per window start s: min key over the w-slice (clamped at the end;
-    // a doc with fewer than w grams winnows one short window)
-    val mins = transform(sequence(lit(0), greatest(size(col("_k")) - w, lit(0))),
-      s => array_min(slice(col("_k"), s + 1, lit(w))))
-    docs
-      .select(col(idCol), grams.as("_g"))
-      .where(size(col("_g")) > 0)
-      .withColumn("_k", keys)
-      .withColumn("_m", array_distinct(mins))
-      .select(col(idCol), explode(col("_m")).as("_sel"), col("_g"))
-      // decode (hash, pos) from the encoded key: pos ∈ [0, 2^21) ⇒
-      // hash = ceil(key / 2^21), pos = hash·2^21 − key
-      .withColumn("gram_hash",
-        floor((col("_sel") + lit(2097151L)) / lit(2097152L)).cast("long"))
-      .withColumn("pos", (col("gram_hash") * lit(2097152L) - col("_sel")).cast("long"))
-      .withColumn("gram", element_at(col("_g"), (col("pos") + 1).cast("int")))
-      .select(col(idCol), col("pos"), col("gram_hash"), col("gram"))
-  }
-
   /** C4-style text normalization — the cleanup projection that runs before
     * any fingerprinting/tokenizing stage on raw web extractions: strip
     * markup tags, unescape the basic HTML entities, blank control
@@ -417,15 +383,6 @@ object TextAnalysis {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(
       graft.functions.WordNgrams(GraftBridge.expression(text), n))
-  }
-
-  /** HOF reference formulation (kept for the equivalence test). */
-  def ngramsHof(text: Column, n: Int): Column = {
-    val toks = tokens(lower(text))
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
   }
 
   /** Corpus-wide n-gram frequency table: explode per-doc n-grams, one

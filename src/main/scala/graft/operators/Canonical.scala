@@ -15,6 +15,12 @@ import org.apache.spark.sql.functions._
   * shuffle on the keys, no global sort. Deterministic as long as `ord` is
   * unique within a key (ingestion ids are). This is the distributed
   * equivalent of pandas keep-last and is safe under any partitioning.
+  *
+  * Why a window and not a `max_by(struct(row), ord)` hash aggregate: the
+  * aggregate won on 20M synthetic bars (3.7 s vs 9.9 s, BASELINE.md's
+  * scale probe) but ran ~1.7x slower on 20M near-unique keys, where Spark
+  * inserts WindowGroupLimit (a map-side top-1 per key) and the aggregate
+  * packs a struct per row.
   */
 object Canonical {
 
@@ -23,21 +29,6 @@ object Canonical {
     df.withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1)
       .drop("_rn")
-  }
-
-  /** Hash-aggregation formulation of keep-last: pack the row into a struct
-    * and take `max_by(row, ord)` — one hash aggregate, no sort. Same result
-    * as [[dedupKeepLast]] (asserted in BarsTfSpec). Measured at 20M rows of
-    * near-unique keys the WINDOW version is ~1.7x faster: Spark inserts
-    * WindowGroupLimit (map-side partial top-1 per key before the shuffle)
-    * while this variant pays per-row struct packing across an 18M-entry
-    * aggregation map. Prefer this variant only when keys are low-cardinality
-    * with many duplicates (struct per group, not per row). */
-  def dedupKeepLastAgg(df: DataFrame, keys: Seq[String], ord: Column): DataFrame = {
-    val payload = df.columns.filterNot(keys.contains).toSeq
-    df.groupBy(keys.map(col): _*)
-      .agg(max_by(struct(payload.map(col): _*), ord).as("_row"))
-      .select(keys.map(col) ++ payload.map(c => col(s"_row.$c")): _*)
   }
 
   /** Keep the FIRST row by `ord` instead (used by exact text dedup where the

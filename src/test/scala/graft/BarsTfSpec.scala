@@ -77,16 +77,6 @@ class BarsTfSpec extends SparkTestBase {
     assert(first.map(_.getAs[Int]("v")).toSeq == Seq(10, 50))
   }
 
-  test("hash-agg keep-last equals the window formulation") {
-    val e = Tables.events(spark, sfDir)
-      .withColumn("minute_ms", unix_millis(date_trunc("minute", col("ts"))))
-      .select("event_type", "minute_ms", "event_id", "value")
-    val viaWindow = Canonical.dedupKeepLast(e, Seq("event_type", "minute_ms"), col("event_id"))
-    val viaAgg = Canonical.dedupKeepLastAgg(e, Seq("event_type", "minute_ms"), col("event_id"))
-    assert(viaWindow.count() == viaAgg.count())
-    assert(viaWindow.exceptAll(viaAgg.select(viaWindow.columns.map(col): _*)).count() == 0)
-  }
-
   test("binance kline CSV ingestion feeds the tf pipeline") {
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "csv").toString

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.llm.{Dedup, Sampling, TextAnalysis}
+import graft.llm.{Dedup, ParityTwins, Sampling, TextAnalysis}
 import graft.sources.Tables
 
 /** Round-13 curation additions: char entropy, keep-best exact dedup,
@@ -136,7 +136,7 @@ class CurationOpsSpec extends SparkTestBase {
     // why the native expression exists); small corpus keeps it affordable
     val small = docs.limit(30)
     val a = TextAnalysis.winnowFingerprints(small, k = 3, w = 4)
-    val b = TextAnalysis.winnowFingerprintsHof(small, k = 3, w = 4)
+    val b = ParityTwins.winnowFingerprintsHof(small, k = 3, w = 4)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
@@ -400,14 +400,14 @@ class CurationOpsSpec extends SparkTestBase {
       (11L, "https://e.com/m", Some(-1e300)))
       .toDF("doc_id", "url", "quality")
     val packed = Dedup.urlKeepBest(docs, col("url"), col("quality"))
-    val ref = Dedup.urlKeepBestStructRef(docs, col("url"), col("quality"))
+    val ref = Dedup.urlKeepBestFullRange(docs, col("url"), col("quality"))
     assert(packed.exceptAll(ref).count() == 0 &&
       ref.exceptAll(packed).count() == 0,
       packed.orderBy("canonical_url").collect().mkString("\n") + "\n----\n" +
         ref.orderBy("canonical_url").collect().mkString("\n"))
     val textDocs = docs.withColumn("text", col("url"))
     val p2 = Dedup.exactKeepBest(textDocs, col("quality"))
-    val r2 = Dedup.exactKeepBestStructRef(textDocs, col("quality"))
+    val r2 = Dedup.exactKeepBestFullRange(textDocs, col("quality"))
     assert(p2.exceptAll(r2).count() == 0 && r2.exceptAll(p2).count() == 0)
   }
 

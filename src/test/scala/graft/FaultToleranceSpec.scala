@@ -27,10 +27,10 @@ object FaultInjector {
 }
 
 /** Demonstrates (not just argues) the fault-tolerance claim of the
-  * pointer-jumping connected-components `reliable = true` mode: with task
-  * retries enabled, injected first-attempt task failures in the edge scan
-  * are retried and the checkpointed run completes with exactly the labels
-  * of a clean run.
+  * pointer-jumping connected components under
+  * `graft.stage.boundary=reliable`: with task retries enabled, injected
+  * first-attempt task failures in the edge scan are retried and the
+  * checkpointed run completes with exactly the labels of a clean run.
   *
   * Needs its own SparkSession because local-mode retry count comes from
   * the master string (`local[4, 2]` = 2 attempts per task); the shared
@@ -60,9 +60,12 @@ class FaultToleranceSpec extends AnyFunSuite {
         .select(col("id").as("id1"), (col("id") + 1).as("id2"))
       val expected = (0L until n).map(i => i -> (i / 10) * 10).toMap
 
-      def labelsOf(e: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-        Cluster.connectedComponents(vertices, e, reliable = true)
+      def labelsOf(e: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+        spark.conf.set("graft.stage.boundary", "reliable")
+        try Cluster.connectedComponents(vertices, e)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        finally spark.conf.unset("graft.stage.boundary")
+      }
 
       val clean = labelsOf(edges)
       assert(clean == expected, "clean run disagrees with ground truth")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.llm.{Dedup, MinHashLsh, Multimodal, SimHash, Similarity, TextAnalysis}
+import graft.llm.{Dedup, MinHashLsh, Multimodal, ParityTwins, SimHash, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 class LlmSpec extends SparkTestBase {
@@ -254,14 +254,14 @@ class LlmSpec extends SparkTestBase {
     ).toDF("doc_id", "text"))
     val diff = withEdge.select(
         Dedup.shingles(col("text"), 3).as("a"),
-        Dedup.shinglesHof(col("text"), 3).as("b"))
+        ParityTwins.shinglesHof(col("text"), 3).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
 
   test("native simhash expression equals the HOF formulation bit-for-bit") {
     val diff = SimHash.withFingerprint(docs).select(col("doc_id"), col("simhash"))
-      .join(SimHash.withFingerprintHof(docs)
+      .join(ParityTwins.withFingerprintHof(docs)
         .select(col("doc_id"), col("simhash").as("hof")), "doc_id")
       .where(col("simhash") =!= col("hof")).count()
     assert(diff == 0)
@@ -336,7 +336,7 @@ class LlmSpec extends SparkTestBase {
     for (n <- Seq(1, 4, 8, 12)) { // 12 > nCells=8 exercises slice shortening
       val ab = vecs.select(
         Similarity.nearestCells(centers, col("_cv"), n).as("a"),
-        Similarity.nearestCellsTree(centers, col("_cv"), n).as("b"))
+        ParityTwins.nearestCellsTree(centers, col("_cv"), n).as("b"))
         .collect()
       ab.foreach { r =>
         assert(r.getSeq[Int](0) == r.getSeq[Int](1),
@@ -369,7 +369,7 @@ class LlmSpec extends SparkTestBase {
     for ((nPlanes, bands) <- Seq((16, 2), (16, 8), (8, 4))) {
       val a = Similarity.withLshBuckets(vecs, dim = 64, nPlanes, bands)
         .select("vec_id", "band", "bucket").as[(Long, Int, Long)].collect().toSet
-      val b = Similarity.withLshBucketsTree(vecs, dim = 64, nPlanes, bands)
+      val b = ParityTwins.withLshBucketsTree(vecs, dim = 64, nPlanes, bands)
         .select("vec_id", "band", "bucket").as[(Long, Int, Long)].collect().toSet
       assert(a == b, s"nPlanes=$nPlanes bands=$bands: native " +
         s"diff ${(a -- b).take(3)} / tree diff ${(b -- a).take(3)}")
@@ -418,13 +418,13 @@ class LlmSpec extends SparkTestBase {
     val ra = bits(vecs.select(col("vec_id"),
       Similarity.rotateVec(col("embedding"), r).as("out")))
     val rb = bits(vecs.select(col("vec_id"),
-      Similarity.rotateVecTree(col("embedding"), r).as("out")))
+      ParityTwins.rotateVecTree(col("embedding"), r).as("out")))
     assert(ra == rb, s"rotate diff: ${ra.find(kv => rb.get(kv._1) != Some(kv._2)).take(1)}")
     for (outDim <- Seq(16, 32)) {
       val pa = bits(vecs.select(col("vec_id"),
         Similarity.projectVec(col("embedding"), 64, outDim).as("out")))
       val pb = bits(vecs.select(col("vec_id"),
-        Similarity.projectVecTree(col("embedding"), 64, outDim).as("out")))
+        ParityTwins.projectVecTree(col("embedding"), 64, outDim).as("out")))
       assert(pa == pb, s"project outDim=$outDim diff: " +
         s"${pa.find(kv => pb.get(kv._1) != Some(kv._2)).take(1)}")
     }
@@ -998,7 +998,7 @@ class LlmSpec extends SparkTestBase {
 
   test("embed_pipeline capstone: per-cell cap + contiguous ranks, twin " +
       "recall >= 90%, escapees are cell-blocking (not threshold) misses, " +
-      "boundary=none is plan-shape-identical") {
+      "an unknown boundary mode throws") {
     val dir = "/root/testdata/sf0.001"
     val out = SparkEntry.queries("embed_pipeline")(spark, dir).collect()
     assert(out.nonEmpty)
@@ -1038,13 +1038,6 @@ class LlmSpec extends SparkTestBase {
           s"twin $t shares its source's cell yet survived — a real miss")
       }
     }
-    // graft.stage.boundary=none: same rows, no materialization — the
-    // boundary is a durability/perf knob, never a semantics knob
-    spark.conf.set("graft.stage.boundary", "none")
-    try {
-      val none = SparkEntry.queries("embed_pipeline")(spark, dir).collect()
-      assert(none.map(_.toSeq).toSet == out.map(_.toSeq).toSet)
-    } finally spark.conf.unset("graft.stage.boundary")
     // invalid boundary mode fails loudly
     spark.conf.set("graft.stage.boundary", "bogus")
     try intercept[IllegalArgumentException] {
@@ -1312,7 +1305,7 @@ class LlmSpec extends SparkTestBase {
     val books = Similarity.pqCodebooks(sample, 64, 8, 16, seed = 7L)
     val both = emb.select(col("vec_id"),
       Similarity.pqEncode(col("embedding"), books, 64).as("native"),
-      Similarity.pqEncodeHof(col("embedding"), books, 64).as("hof"))
+      ParityTwins.pqEncodeHof(col("embedding"), books, 64).as("hof"))
     assert(both.where(not(col("native") === col("hof"))).count() == 0)
     assert(both.where(col("native").isNull).count() == 0)
   }

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.llm.{Dedup, TextAnalysis}
+import graft.llm.{Dedup, ParityTwins, TextAnalysis}
 import graft.operators.{Sessions, Stats}
 import graft.sources.Lake
 
@@ -156,7 +156,7 @@ class StatsSessionsSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val both = docs.select(
       TextAnalysis.ngrams(col("text"), 2).as("native"),
-      TextAnalysis.ngramsHof(col("text"), 2).as("hof"))
+      ParityTwins.ngramsHof(col("text"), 2).as("hof"))
     assert(both.where(not(col("native") === col("hof"))).count() === 0L)
   }
 
