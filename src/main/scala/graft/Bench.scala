@@ -11,7 +11,7 @@ object Bench {
     // reps=1 were contention phantoms, so medians-of-3 is now the default)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val spark = GraftSession.configure(
-        SparkSession.builder().master(s"local[$cpus]"), cpus)
+        SparkSession.builder().master(s"local[$cpus]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/IO warm-up so the first timed query isn't charged for it

@@ -23,7 +23,7 @@ object Verify {
     // round-12 evidence loss; sf0.01 data is tiny, so threads are free
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = GraftSession.configure(
-        SparkSession.builder().master(s"local[$cpus]"), cpus)
+        SparkSession.builder().master(s"local[$cpus]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

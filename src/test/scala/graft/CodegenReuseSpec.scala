@@ -20,6 +20,9 @@ class CodegenReuseSpec extends SparkTestBase {
   test("GraftSession sizes the codegen cache and drops stage ids from class names") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+    // and lets AQE coalesce the final stage of cached plans
+    assert(spark.conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
   }
 
   test("a warm corpus_pipeline_v5 run recompiles almost nothing") {

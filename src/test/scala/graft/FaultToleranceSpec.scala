@@ -44,7 +44,7 @@ class FaultToleranceSpec extends AnyFunSuite {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     val spark = GraftSession.configure(
-        SparkSession.builder().appName("graft-fault").master("local[4, 2]"), "4")
+        SparkSession.builder().appName("graft-fault").master("local[4, 2]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
@@ -94,7 +94,7 @@ class FaultToleranceSpec extends AnyFunSuite {
       .foreach(_.stop())
     val spark = GraftSession.configure(
         SparkSession.builder().appName("graft-fault-capstone")
-          .master("local[4, 2]"), "4")
+          .master("local[4, 2]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

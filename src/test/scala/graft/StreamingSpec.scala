@@ -801,6 +801,26 @@ class StreamingSpec extends SparkTestBase {
       >= accIds.count(_ >= 100))
   }
 
+  test("near-dup batch writes its decisions slice in at most " +
+      "leafNodeDefaultParallelism part files") {
+    // the decisions are a union over the batch's cached relations; a cache
+    // that kept all spark.sql.shuffle.partitions partitions wrote one
+    // near-empty part file per partition
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .where(col("doc_id") < 80L).select(col("doc_id"), col("text"))
+    assert(docs.count() == 80)
+    val root = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "neardup-files").toString
+    assert(Ingest.nearDupBatch(docs, 0L, root, threshold = 0.3))
+    val parts = new java.io.File(s"$root/decisions/batch_id=0").listFiles()
+      .count(f => f.getName.startsWith("part-"))
+    val leaf = spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    info(s"decisions/batch_id=0: $parts part files")
+    assert(parts >= 1 && parts <= leaf, s"$parts part files, limit $leaf")
+    assert(spark.read.parquet(s"$root/decisions/batch_id=0").count() == 80)
+  }
+
   test("near-dup loop compaction: compacted decisions ≡ uncompacted, " +
       "index file count bounded, replay across the boundary safe, " +
       "foreign commitId rejected") {
