@@ -302,9 +302,7 @@ object Multimodal {
                         idCol: String = "doc_id",
                         payloadCol: String = "payload",
                         maxBucket: Option[Int] = None): DataFrame =
-    SimHash.nearDupPairsOnFingerprint(
-      withDHash(withPayloads, payloadCol)
-        .select(col(idCol), col("dhash")),
+    SimHash.nearDupPairsOnFingerprint(withDHash(withPayloads, payloadCol),
       maxHamming, idCol, "dhash", maxBucket)
 
   /** CONTAINER-AWARE dHash over real PNG/JPEG payload bytes
@@ -337,9 +335,7 @@ object Multimodal {
                                   idCol: String = "doc_id",
                                   payloadCol: String = "payload",
                                   maxBucket: Option[Int] = None): DataFrame =
-    SimHash.nearDupPairsOnFingerprint(
-      withContainerDHash(withPayloads, payloadCol)
-        .select(col(idCol), col("dhash")),
+    SimHash.nearDupPairsOnFingerprint(withContainerDHash(withPayloads, payloadCol),
       maxHamming, idCol, "dhash", maxBucket)
 
   /** The perceptual INDEX relation for [[perceptualNearDupIncremental]]:
@@ -368,135 +364,47 @@ object Multimodal {
     * accepted. The accepted rows are what gets appended to the corpus
     * AND (via [[buildDHashIndex]]) to the index.
     *
-    * Scale posture: the dHash map pass is O(batch); candidates come from
-    * 16-bit band-chunk equi-joins (batch × index, then batch × batch for
-    * the survivors) with `maxBucket` capping the COMBINED population of
-    * a chunk (the drop-the-template-family guard, riding the join's own
-    * exchange); verification is one bit_count per candidate pair.
-    * Historical payloads appear nowhere — the index ships 8-byte hashes.
-    * Decisions are bit-identical to a full [[perceptualNearDup]] pass
-    * over history ∪ batch restricted to pairs touching the batch (LlmSpec
-    * pins it). */
+    * The dHash map pass is O(batch), verification is one bit_count per
+    * candidate pair, and historical payloads appear nowhere — the index
+    * ships 8-byte hashes. Decisions are bit-identical to a full
+    * [[perceptualNearDup]] pass over history ∪ batch restricted to pairs
+    * touching the batch (LlmSpec pins it). The mechanism, `maxBucket`'s
+    * combined cap and the returned frame's lifecycle are
+    * [[MinHashLsh.decideIncremental]]'s. */
   def perceptualNearDupIncremental(batch: DataFrame, dhashIndex: DataFrame,
                                    maxHamming: Int = 10,
                                    idCol: String = "doc_id",
                                    payloadCol: String = "payload",
-                                   maxBucket: Option[Int] = None): DataFrame = {
-    val (res, release) = perceptualNearDupIncrementalPinned(batch, dhashIndex,
-      maxHamming, idCol, payloadCol, maxBucket)
-    // eager local checkpoint + release — the [[MinHashLsh.nearDupIncremental]]
-    // lifecycle: the returned frame is O(batch) decision rows with severed
-    // lineage, and the internal pins (batch fingerprint map, index-match
-    // relation, component labels) are dropped before returning, so a
-    // long-running stream holds at most one batch's blocks at a time
-    val out = res.localCheckpoint(true)
-    release()
-    out
-  }
+                                   maxBucket: Option[Int] = None): DataFrame =
+    MinHashLsh.checkpointed(perceptualNearDupIncrementalPinned(batch,
+      dhashIndex, maxHamming, idCol, payloadCol, maxBucket))
 
-  /** The lazy plan behind [[perceptualNearDupIncremental]] plus a release
-    * thunk for its block-manager pins (the
-    * [[MinHashLsh.nearDupIncrementalPinned]] contract): the batch dHash map
-    * and the index-match relation are each read by several separate actions
-    * (the component loop's rounds plus the final union) and exchange reuse
-    * only dedupes within one plan, so without the pins the dHash pass ran
-    * ~4x and the index-side map ~3x per batch. Callers must run ALL actions
-    * before calling release. */
+  /** The lazy plan behind [[perceptualNearDupIncremental]] plus its
+    * release thunk ([[MinHashLsh.decideIncremental]]); the cached batch
+    * relation is the id and its 8-byte hash. */
   private[graft] def perceptualNearDupIncrementalPinned(
       batch: DataFrame, dhashIndex: DataFrame,
       maxHamming: Int = 10,
       idCol: String = "doc_id",
       payloadCol: String = "payload",
-      maxBucket: Option[Int] = None): (DataFrame, () => Unit) = {
-    // O(batch) rows: id + 8-byte hash. The id-keyed repartition stays
-    // although AQE coalesces the cache to a partition or two: without
-    // it `graft.Bench` perceptual_incremental (sf0.1, 4 cores, 2 paired
-    // runs) took 1.99 / 2.38 s against 1.97 / 2.04 s
-    val fps = withDHash(batch, payloadCol)
-      .select(col(idCol), col("dhash"))
-      .repartition(col(idCol))
-      .cache()
-    val hashable = fps.where(col("dhash").isNotNull)
-    def chunks(df: DataFrame, id: String, as: String) =
-      df.select(col(id).as(as), col("dhash"),
-        explode(array((0 until 4).map { b =>
-          struct(lit(b).as("band"),
-            SimHash.bandChunk(col("dhash"), b).as("chunk"))
-        }: _*)).as("_b"))
-        .select(col(as), col("dhash").as(s"_fp_$as"),
-          col("_b.band").as("band"), col("_b.chunk").as("chunk"))
-    val bb0 = chunks(hashable, idCol, "batch_id")
-    val ib0 = chunks(dhashIndex, idCol, "index_id")
-    // combined-population cap over the tagged union's single exchange
-    val (bb, ib) = maxBucket match {
-      case None => (bb0, ib0)
-      case Some(cap) =>
-        val u = bb0.select(col("batch_id").as("_id"),
-            col("_fp_batch_id").as("_fp"), col("band"), col("chunk"),
-            lit(true).as("_isBatch"))
-          .unionByName(ib0.select(col("index_id").as("_id"),
-            col("_fp_index_id").as("_fp"), col("band"), col("chunk"),
-            lit(false).as("_isBatch")))
-          .repartition(col("band"), col("chunk"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("chunk"))
-        val capped = u.withColumn("_bc", count(lit(1)).over(w))
-          .where(col("_bc") <= cap).drop("_bc")
-        (capped.where(col("_isBatch")).select(col("_id").as("batch_id"),
-           col("_fp").as("_fp_batch_id"), col("band"), col("chunk")),
-         capped.where(!col("_isBatch")).select(col("_id").as("index_id"),
-           col("_fp").as("_fp_index_id"), col("band"), col("chunk")))
-    }
-    // no distinct before the aggregation: a pair matching in several band
-    // chunks emits duplicate (batch_id, index_id, hamming) rows, but min /
-    // min_by are duplicate-insensitive (hamming is a function of the pair),
-    // so the distinct's exchange was pure overhead — the verify here is a
-    // map-side bit_count, not a join worth deduplicating candidates for
-    // cached for the cross-action reason above: the anti-join, the
-    // component loop's edge chain and the final union each read this
-    // relation from a different action, and its upstream holds the one
-    // INDEX-side dHash map of the call. O(batch dups) rows.
-    val dupIdx = bb.join(ib, Seq("band", "chunk"))
-      .select(col("batch_id"), col("index_id"),
-        bit_count(col("_fp_batch_id").bitwiseXOR(col("_fp_index_id")))
-          .as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .groupBy(col("batch_id"))
-      .agg(min(col("index_id")).as("match_id"),
-        min_by(col("hamming"), col("index_id")).as("hamming"))
-      .cache()
-    // survivors of the index pass near-dup-cluster WITHIN the batch;
-    // the min-id member of each component survives
-    val rest = hashable.join(
-      dupIdx.select(col("batch_id").as(idCol)), Seq(idCol), "left_anti")
-    val pairs = SimHash.nearDupPairsOnFingerprint(rest, maxHamming,
-      idCol, "dhash", maxBucket)
-    val comps = Cluster.activeComponents(pairs.select(col("id1"), col("id2")))
-    val dupInBatch = comps.where(col("id") =!= col("cluster_id"))
-      .select(col("id").as(idCol), lit("dup_in_batch").as("status"),
-        col("cluster_id").as("match_id"),
-        lit(null).cast("int").as("hamming"))
-    val dupOfIndex = dupIdx.select(col("batch_id").as(idCol),
-      lit("dup_of_index").as("status"), col("match_id"),
-      col("hamming").cast("int").as("hamming"))
-    val decided = dupOfIndex.unionByName(dupInBatch)
-    val accepted = fps.join(decided.select(col(idCol)), Seq(idCol), "left_anti")
-      .select(col(idCol),
-        when(col("dhash").isNull, "unhashable").otherwise("accepted")
-          .as("status"),
-        lit(null).cast("long").as("match_id"),
-        lit(null).cast("int").as("hamming"))
-    val result = decided.unionByName(accepted)
-    val release = () => {
-      fps.unpersist(blocking = false)
-      dupIdx.unpersist(blocking = false)
-      // activeComponents returns a pinned local checkpoint; without this
-      // the streaming loop leaks one labels relation per micro-batch (the
-      // exact hygiene fix the MinHash loop received in r16)
-      org.apache.spark.sql.GraftBridge.releasePinned(comps)
-    }
-    (result, release)
-  }
+      maxBucket: Option[Int] = None): (DataFrame, () => Unit) =
+    MinHashLsh.decideIncremental(batch, dhashIndex, idCol, maxBucket,
+      fingerprint = withDHash(_, payloadCol).select(col(idCol), col("dhash")),
+      keys = Seq("band", "chunk"),
+      bandKeys = SimHash.bandChunks(_, idCol, "dhash"),
+      score = "hamming",
+      // no distinct before the aggregation: a pair matching in several
+      // band chunks emits duplicate (batch_id, index_id, hamming) rows, but
+      // min / min_by are duplicate-insensitive (hamming is a function of
+      // the pair), and the verify is a map-side bit_count, not a join
+      // worth deduplicating candidates for
+      verify = (cand, _) => cand.select(col("batch_id"), col("index_id"),
+          bit_count(col("batch_dhash").bitwiseXOR(col("index_dhash")))
+            .as("hamming"))
+        .where(col("hamming") <= maxHamming),
+      within = SimHash.nearDupPairsOnFingerprint(_, maxHamming, idCol,
+        "dhash", maxBucket),
+      hashable = Some(col("dhash").isNotNull))
 
   /** Batched per-partition "decode" over the binary payload — the real
     * plumbing (schema, batching, partition-parallel, no shuffle) with the

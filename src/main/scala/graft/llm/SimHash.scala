@@ -29,55 +29,39 @@ object SimHash {
     shiftrightunsigned(fp, band * 16).bitwiseAND(lit(0xFFFFL))
 
   /** Candidate pairs sharing at least one 16-bit chunk, verified to be
-    * within `maxHamming` bits (bit_count of the XOR).
-    *
-    * `maxBucket` drops chunks shared by more than that many docs before
-    * the self-join: a boilerplate/template-heavy corpus concentrates
-    * thousands of near-identical fingerprints in one chunk, whose B^2
-    * join rows are the hot-bucket blowup (same guard, same recall trade,
-    * and same zero-extra-shuffle window as
-    * [[MinHashLsh.candidatePairs]]). */
+    * within `maxHamming` bits (bit_count of the XOR). `maxBucket` drops
+    * chunks shared by more than that many docs before the self-join
+    * ([[MinHashLsh.capBuckets]]: same guard, same recall trade). */
   def nearDupPairs(docs: DataFrame, maxHamming: Int = 8,
                    idCol: String = "doc_id", textCol: String = "text",
                    maxBucket: Option[Int] = None): DataFrame =
-    nearDupPairsOnFingerprint(
-      withFingerprint(docs, textCol).select(col(idCol), col("simhash")),
-      maxHamming, idCol, "simhash", maxBucket)
+    nearDupPairsOnFingerprint(withFingerprint(docs, textCol), maxHamming,
+      idCol, "simhash", maxBucket)
+
+  /** (idCol, fpCol, band, chunk): one row per 16-bit band chunk of each
+    * 64-bit fingerprint — the band keys of text SimHash and the
+    * perceptual dHash, in the full pass and the incremental one. */
+  private[graft] def bandChunks(fps: DataFrame, idCol: String,
+                                fpCol: String): DataFrame =
+    fps.select(col(idCol), col(fpCol),
+        explode(array((0 until 4).map { b =>
+          struct(lit(b).as("band"), bandChunk(col(fpCol), b).as("chunk"))
+        }: _*)).as("_b"))
+      .select(col(idCol), col(fpCol), col("_b.band").as("band"),
+        col("_b.chunk").as("chunk"))
 
   /** The Hamming-banded candidate join over ANY 64-bit fingerprint
     * relation (idCol, fpCol) — shared by text SimHash and the
     * perceptual dHash ([[Multimodal.perceptualNearDup]]): 4×16-bit band
-    * chunks, equi-join per chunk, exact bit_count(XOR) verify. Same
-    * hot-bucket `maxBucket` guard and recall trade as
-    * [[MinHashLsh.candidatePairs]]. */
+    * chunks through [[MinHashLsh.bandSelfJoin]], exact bit_count(XOR)
+    * verify. Output: (id1, id2, fp1, fp2, hamming). */
   def nearDupPairsOnFingerprint(fps: DataFrame, maxHamming: Int,
                                 idCol: String, fpCol: String,
-                                maxBucket: Option[Int]): DataFrame = {
-    // compute-once without caching: the explicit repartition on the join
-    // keys pins a shuffle exchange that is canonically identical under both
-    // self-join sides, so exchange/stage reuse runs the fingerprint map
-    // stage once and serves both readers from shuffle files — no
-    // block-manager residue, fault-tolerant via lineage
-    val banded0 = fps.select(col(idCol), col(fpCol).as("simhash"))
-      .select(col(idCol), col("simhash"),
-        explode(array((0 until 4).map { b =>
-          struct(lit(b).as("band"), bandChunk(col("simhash"), b).as("chunk"))
-        }: _*)).as("_b"))
-      .select(col(idCol), col("simhash"), col("_b.band").as("band"), col("_b.chunk").as("chunk"))
-      .repartition(col("band"), col("chunk"))
-    val banded = maxBucket.fold(banded0) { cap =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band"), col("chunk"))
-      banded0.withColumn("_bc", count(lit(1)).over(w))
-        .where(col("_bc") <= cap).drop("_bc")
-    }
-    val l = banded.select(col("band"), col("chunk"), col(idCol).as("id1"), col("simhash").as("fp1"))
-    val r = banded.select(col("band"), col("chunk"), col(idCol).as("id2"), col("simhash").as("fp2"))
-    l.join(r, Seq("band", "chunk"))
-      .where(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"), col("fp1"), col("fp2"))
-      .distinct()
+                                maxBucket: Option[Int]): DataFrame =
+    MinHashLsh.bandSelfJoin(
+        bandChunks(fps.select(col(idCol), col(fpCol).as("simhash")), idCol,
+          "simhash"),
+        Seq("band", "chunk"), idCol, maxBucket, Seq("simhash" -> "fp"))
       .withColumn("hamming", bit_count(col("fp1").bitwiseXOR(col("fp2"))))
       .where(col("hamming") <= maxHamming)
-  }
 }

@@ -371,21 +371,12 @@ object Similarity {
   def nearDupPairs(df: DataFrame, threshold: Double, dim: Int,
                    nPlanes: Int = 16, bands: Int = 2, seed: Int = 7,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // plane projections evaluate once per row without caching: the explicit
-    // repartition on the join keys pins a shuffle exchange that is
-    // canonically identical under both self-join sides, so exchange/stage
-    // reuse runs the bucket map stage once and serves both readers from
-    // shuffle files; the pair distinct carries ids only, vectors re-join
-    // afterwards
-    val b = withLshBuckets(df, dim, nPlanes, bands, seed, vecCol)
-      .select(col("band"), col("bucket"), col(idCol).as("_id"))
-      .repartition(col("band"), col("bucket"))
-    val ids = b.select(col("band"), col("bucket"), col("_id").as("id1"))
-      .join(b.select(col("band"), col("bucket"), col("_id").as("id2")),
-        Seq("band", "bucket"))
-      .where(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"))
-      .distinct()
+    // plane projections evaluate once per row (MinHashLsh.bandSelfJoin);
+    // the pair distinct carries ids only, vectors re-join afterwards
+    val ids = MinHashLsh.bandSelfJoin(
+      withLshBuckets(df, dim, nPlanes, bands, seed, vecCol)
+        .select(col("band"), col("bucket"), col(idCol).as("_id")),
+      Seq("band", "bucket"), "_id", maxBucket = None)
     val v = df.select(col(idCol), col(vecCol).cast("array<double>").as("_v"))
     ids
       .join(v.select(col(idCol).as("id1"), col("_v").as("_v1")), "id1")

@@ -440,6 +440,35 @@ object Ingest {
       .foreach(k => fs.delete(markPath(root, commitId, k), false))
   }
 
+  /** One [[commitOnce]] micro-batch of a banded near-dup family
+    * ([[nearDupBatch]], [[perceptualDedupBatch]]): `decide` the batch
+    * against the `index` state snapshot → `decisions/batch_id=N` → the
+    * accepted docs' `indexOf` slice `index/batch_id=N`. Identity fold:
+    * each accepted doc's index row lives in exactly one slice, so
+    * compaction only bounds the file count — and a duplicate index row
+    * (the residue own-slice overwrite rules out) would inflate maxBucket's
+    * combined band-bucket population so later batches silently drop real
+    * candidates. The decisions are an eager local checkpoint
+    * ([[graft.llm.MinHashLsh.checkpointed]]), so the two writes read
+    * settled blocks; they are released even when a write fails, so a
+    * stream holds no decision blocks between batches. */
+  private def bandedBatch(batch: DataFrame, batchId: Long, indexRoot: String,
+                          idCol: String, commitId: String, compactEvery: Int,
+                          stateCols: Seq[String],
+                          indexOf: DataFrame => DataFrame)(
+      decide: DataFrame => DataFrame): Boolean = {
+    val spark = batch.sparkSession
+    val state = StateDir("index", stateCols, () => indexOf(batch.limit(0)))
+    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
+        compactEvery) {
+      val decisions = decide(deltaSnapshot(spark, indexRoot, commitId, state,
+        col("batch_id") =!= batchId))
+      try indexAccepted(spark, indexRoot, batchId, decisions, idCol) { acc =>
+        indexOf(batch.join(acc, Seq(idCol)))
+      } finally GraftBridge.releasePinned(decisions)
+    }
+  }
+
   /** Streaming incremental NEAR-dup dedup — the production growing-corpus
     * loop around [[graft.llm.MinHashLsh.nearDupIncremental]]: each
     * micro-batch dedups against the accumulated signature/shingle-hash
@@ -464,41 +493,21 @@ object Ingest {
     eachBatch(docs)(nearDupBatch(_, _, indexRoot, threshold, idCol, textCol,
       k, bands, shingleN, seed, maxBucket, commitId, compactEvery))
 
-  /** One [[commitOnce]] micro-batch of [[nearDupWriter]]: dedup against
-    * the index → `decisions/batch_id=N` → the accepted docs' signature
-    * slice `index/batch_id=N`. Identity fold: each accepted doc's
-    * signature lives in exactly one slice, so compaction only bounds the
-    * file count — and a duplicate signature row (the residue own-slice
-    * overwrite rules out) would inflate maxBucket's combined band-bucket
-    * population for every later batch. */
+  /** One [[bandedBatch]] micro-batch of [[nearDupWriter]]; the index
+    * slice is the accepted docs' signatures and shingle hashes. */
   def nearDupBatch(batch: DataFrame, batchId: Long, indexRoot: String,
                    threshold: Double, idCol: String = "doc_id",
                    textCol: String = "text", k: Int = 32, bands: Int = 8,
                    shingleN: Int = 3, seed: Int = 42,
                    maxBucket: Option[Int] = None,
                    commitId: String = "stream",
-                   compactEvery: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    val state = StateDir("index", Seq(idCol, "minhash_sig", "shingle_hashes"),
-      () => MinHashLsh.buildIndex(batch.limit(0), idCol, textCol, k,
-        shingleN, seed))
-    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
-        compactEvery) {
-      // nearDupIncremental returns an eagerly-materialized local checkpoint
-      // (its internal pins already released), so the two writes read
-      // settled blocks. Those blocks are RDD-persisted directly (LogicalRDD
-      // leaf), which CacheManager-based unpersist does not touch: release
-      // them even when a write fails, so a failing stream leaks nothing
-      val decisions = MinHashLsh.nearDupIncremental(batch,
-        deltaSnapshot(spark, indexRoot, commitId, state,
-          col("batch_id") =!= batchId),
-        threshold, idCol, textCol, k, bands, shingleN, seed, maxBucket)
-      try indexAccepted(spark, indexRoot, batchId, decisions, idCol) { acc =>
-        MinHashLsh.buildIndex(batch.join(acc, Seq(idCol)), idCol, textCol, k,
-          shingleN, seed)
-      } finally GraftBridge.releasePinned(decisions)
+                   compactEvery: Int = 0): Boolean =
+    bandedBatch(batch, batchId, indexRoot, idCol, commitId, compactEvery,
+        Seq(idCol, "minhash_sig", "shingle_hashes"),
+        MinHashLsh.buildIndex(_, idCol, textCol, k, shingleN, seed)) {
+      MinHashLsh.nearDupIncremental(batch, _, threshold, idCol, textCol, k,
+        bands, shingleN, seed, maxBucket)
     }
-  }
 
   /** Streaming perceptual image-dedup loop — the production shape of
     * [[graft.llm.Multimodal.perceptualNearDupIncremental]] for a
@@ -519,34 +528,21 @@ object Ingest {
     eachBatch(docs)(perceptualDedupBatch(_, _, indexRoot, maxHamming, idCol,
       payloadCol, maxBucket, commitId, compactEvery))
 
-  /** One [[commitOnce]] micro-batch of [[perceptualDedupWriter]]: dedup
-    * against the index → `decisions/batch_id=N` → the accepted hashes'
-    * slice `index/batch_id=N`. Identity fold: each accepted doc's dHash
-    * lives in exactly one slice, so compaction only bounds the file count
-    * — and a duplicate dHash row would inflate maxBucket's per-(band,
-    * chunk) population so later batches silently drop real candidates. */
+  /** One [[bandedBatch]] micro-batch of [[perceptualDedupWriter]]; the
+    * index slice is the accepted docs' dHashes. */
   def perceptualDedupBatch(batch: DataFrame, batchId: Long,
                            indexRoot: String, maxHamming: Int = 10,
                            idCol: String = "doc_id",
                            payloadCol: String = "payload",
                            maxBucket: Option[Int] = None,
                            commitId: String = "stream",
-                           compactEvery: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    val state = StateDir("index", Seq(idCol, "dhash"),
-      () => Multimodal.buildDHashIndex(batch.limit(0), idCol, payloadCol))
-    commitOnce(spark, indexRoot, commitId, batchId, Some(state),
-        compactEvery) {
-      val index = deltaSnapshot(spark, indexRoot, commitId, state,
-        col("batch_id") =!= batchId)
-      indexAccepted(spark, indexRoot, batchId,
-          Multimodal.perceptualNearDupIncremental(batch, index, maxHamming,
-            idCol, payloadCol, maxBucket), idCol) { acc =>
-        Multimodal.buildDHashIndex(batch.join(acc, Seq(idCol)), idCol,
-          payloadCol)
-      }
+                           compactEvery: Int = 0): Boolean =
+    bandedBatch(batch, batchId, indexRoot, idCol, commitId, compactEvery,
+        Seq(idCol, "dhash"),
+        Multimodal.buildDHashIndex(_, idCol, payloadCol)) {
+      Multimodal.perceptualNearDupIncremental(batch, _, maxHamming, idCol,
+        payloadCol, maxBucket)
     }
-  }
 
   /** Streaming incremental SEMANTIC dedup — the production loop around
     * [[graft.llm.Similarity.semanticDedupIncremental]] (growing-corpus

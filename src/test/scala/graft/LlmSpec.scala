@@ -704,6 +704,49 @@ class LlmSpec extends SparkTestBase {
       col("hamming") === 0).count() >= accepted.count())
   }
 
+  test("incremental maxBucket caps the COMBINED index + batch bucket " +
+      "population (MinHash and dHash)") {
+    // a 60-copy template family split 30 / 30 between index and batch:
+    // each side alone is under the cap of 40, together every bucket the
+    // family shares holds 60 — so only a combined count drops it
+    val template = "the same boilerplate template text repeated across " +
+      "the whole mirror family"
+    val organic = "a genuinely distinct document about market " +
+      "microstructure liquidity dynamics funding basis and open interest in "
+    val hist = ((0L until 30L).map(i => (i, template)) :+
+      (9000L, organic + "futures")).toDF("doc_id", "text")
+    val batch = ((100L until 130L).map(i => (i, template)) :+
+      (9001L, organic + "futurez")).toDF("doc_id", "text")
+    Seq(
+      "minhash" -> ((cap: Option[Int]) => MinHashLsh.nearDupIncremental(
+        batch, MinHashLsh.buildIndex(hist), threshold = 0.3,
+        maxBucket = cap)),
+      "dhash" -> ((cap: Option[Int]) => Multimodal.perceptualNearDupIncremental(
+        Multimodal.withPayload(batch),
+        Multimodal.buildDHashIndex(Multimodal.withPayload(hist)),
+        maxBucket = cap))
+    ).foreach { case (family, decide) =>
+      val byId = Seq(None, Some(40)).map { cap =>
+        decide(cap).collect().map(r => r.getLong(0) -> r).toMap
+      }
+      val Seq(uncapped, capped) = byId
+      val family100 = (100L until 130L)
+      assert(family100.forall(i =>
+        uncapped(i).getString(1) == "dup_of_index"), s"$family: $uncapped")
+      assert(family100.forall(i =>
+        capped(i).getString(1) != "dup_of_index"), s"$family: $capped")
+      // within the batch alone the family is under the cap: it clusters
+      // onto its min-id survivor instead
+      assert(capped(100L).getString(1) == "accepted", s"$family: $capped")
+      assert(family100.tail.forall(i => capped(i).getString(1) ==
+        "dup_in_batch" && capped(i).getLong(2) == 100L), s"$family: $capped")
+      // the organic pair shares no capped bucket: decided identically
+      assert(uncapped(9001L) == capped(9001L), s"$family: ${capped(9001L)}")
+      assert(capped(9001L).getString(1) == "dup_of_index" &&
+        capped(9001L).getLong(2) == 9000L, s"$family: ${capped(9001L)}")
+    }
+  }
+
   test("shard packing: greedy token-budget packs, stable shards, straddle rule") {
     import spark.implicits._
     def words(n: Int) = (1 to n).map(i => s"t$i").mkString(" ")

@@ -286,24 +286,39 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("nearDupIncremental: the batch prep exchange is computed once and " +
       "reused by all downstream consumers at runtime") {
-    import graft.llm.MinHashLsh
+    import graft.llm.{MinHashLsh, Multimodal}
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).limit(200)
     val hist = d.where(col("doc_id") % 3 === 0)
     val batch = d.where(col("doc_id") % 3 =!= 0)
-    // the lazy Pinned variant: the public API checkpoints eagerly (its
-    // executed plan is just a checkpoint scan), so the exchange-reuse
-    // audit must look at the pre-checkpoint plan
-    val (out, release) = MinHashLsh.nearDupIncrementalPinned(
-      batch, MinHashLsh.buildIndex(hist), threshold = 0.3)
-    out.collect() // drive to the final adaptive plan
-    val p = out.queryExecution.executedPlan.toString
-    release()
-    // the signature+shingle-hash map over the batch text is the expensive
-    // per-row pass with five consumers; the id-keyed repartition must be
-    // served from shuffle files after the first materialization
-    assert(p.contains("ReusedExchange"), p)
-    assert(!p.contains("CartesianProduct"), p)
+    // the lazy Pinned variants: the public API checkpoints eagerly (its
+    // executed plan is just a checkpoint scan), so the audit must look at
+    // the pre-checkpoint plan; MinHash and dHash share the incremental
+    // decision pass
+    Seq[(String, DataFrame => (DataFrame, () => Unit))](
+      "minhash" -> (b => MinHashLsh.nearDupIncrementalPinned(
+        b, MinHashLsh.buildIndex(hist), threshold = 0.3)),
+      "dhash" -> (b => Multimodal.perceptualNearDupIncrementalPinned(
+        Multimodal.withPayload(b),
+        Multimodal.buildDHashIndex(Multimodal.withPayload(hist))))
+    ).foreach { case (family, pinned) =>
+      // every batch row passes this tap once per evaluation of the batch
+      // map: the fingerprint pass over the batch has several consumers
+      // across several jobs and must run exactly once
+      val seen = spark.sparkContext.longAccumulator(s"$family-batch-rows")
+      val tap = udf { (t: String) => seen.add(1); t }
+      val (out, release) = pinned(batch.withColumn("text", tap(col("text"))))
+      out.collect() // drive to the final adaptive plan
+      val p = out.queryExecution.executedPlan.toString
+      release()
+      assert(seen.value == batch.count(),
+        s"$family: batch map evaluated ${seen.value} rows for ${batch.count()}")
+      assert(!p.contains("CartesianProduct"), s"$family: $p")
+      // MinHash reads the index twice (band buckets, shingle hashes);
+      // the second read is served from the first's shuffle files. The
+      // dHash index is read once, so it has no exchange to reuse.
+      if (family == "minhash") assert(p.contains("ReusedExchange"), p)
+    }
   }
 
   test("char entropy: the O(len) native pass is computed once per row, " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.llm.{Cluster, MinHashLsh, SimHash, Similarity}
+import graft.llm.{Cluster, MinHashLsh, Multimodal, SimHash, Similarity}
 import graft.ml.MlFilter
 import graft.operators.{Backtest, Profile, Stats}
 
@@ -169,6 +169,19 @@ class ScaleHygieneSpec extends SparkTestBase {
     // the loop still deduped across batches while staying clean
     val dec = spark.read.parquet(s"$root/decisions")
     assert(dec.where(col("status") === "dup_of_index").count() > 0)
+    // the perceptual loop decides through the same incremental pass and
+    // must release its decision checkpoint the same way
+    val pRoot = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "perceptual-hygiene").toString
+    Seq(wave(1, 20) -> 0L, wave(21, 40) -> 1L, wave(41, 60) -> 2L)
+      .foreach { case (b, id) =>
+        assert(graft.streaming.Ingest.perceptualDedupBatch(
+          Multimodal.withPayload(b), id, pRoot))
+        assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+          s"perceptual micro-batch $id left persisted blocks")
+      }
+    assert(spark.read.parquet(s"$pRoot/decisions")
+      .where(col("status") === "dup_of_index").count() > 0)
   }
 
   test("connected components: 200-vertex chain converges within 20 rounds") {
